@@ -1743,7 +1743,7 @@ def _extract_pages_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pages are synthesized from the events table with known tag structure
     (head/script to drop, entity to unescape, comment to strip), so DuckDB
-    can state the exact expected text/lang — a full oracle over the pandas
+    can state the exact expected text/lang — a full oracle over the Arrow
     UDF path, not a rows-only check."""
     from geomesa_nifi_spark.functions.extract import extract_pages
 
@@ -1774,7 +1774,7 @@ FROM ch WHERE op <> 'delete'
 
 
 def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched media feature extraction (mapInPandas plumbing).
+    """Arrow-batched media feature extraction (mapInArrow plumbing).
 
     The raw ``features`` array is projected to a comma-joined list of the
     exact uint16 lattice values it was derived from (features = raw/65536 is

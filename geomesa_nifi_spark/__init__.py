@@ -15,8 +15,8 @@ as:
       -> per-batch lineage + metrics                  streaming/lineage.py
 
 Everything is DataFrame/SQL-first: Catalyst plans the joins and aggregations,
-pandas UDFs (Arrow) are used only for the genuinely non-relational extraction
-stage, and no per-row Python runs anywhere in the hot path.
+Arrow UDFs (``arrow_udf``) are used only for the genuinely non-relational
+extraction stage, and no per-row Python runs anywhere in the hot path.
 """
 
 from geomesa_nifi_spark.lake import (  # noqa: F401

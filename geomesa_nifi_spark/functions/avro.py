@@ -515,29 +515,12 @@ def _encode_container(
     return out.getvalue()
 
 
-def _decode_container(data: bytes) -> tuple[T.StructType, list[dict]]:
-    schema, reader, blocks, avro_schema = _open_container(data)
-    avro_fields = {f["name"]: f["type"] for f in avro_schema.get("fields", [])}
-    decoders = [
-        (f.name, _make_nullable_decoder(f.dataType, avro_fields.get(f.name)))
-        for f in schema.fields
-    ]
-    rows: list[dict] = []
-    for count, payload in blocks:
-        r = _Reader(payload)
-        for _ in range(count):
-            rows.append({name: dec(r) for name, dec in decoders})
-    return schema, rows
-
-
 def _decode_container_columns(data: bytes) -> tuple[T.StructType, dict[str, list], int]:
     """Column-wise container decode: (schema, {name: values}, n_rows).
 
-    Same decoders as :func:`_decode_container` but appending straight into
-    per-column lists — no per-row dict, and the caller can hand the columns
-    dict directly to ``pd.DataFrame``/``pa.RecordBatch.from_pydict`` (their
-    fast constructors).  This is the hot-path variant for the
-    GeoAvro-over-Kafka decode (``streaming/kafka.py``)."""
+    Decoders append straight into per-column lists — no per-row dict, and
+    the columns dict goes directly to ``pa.RecordBatch.from_pydict`` (see
+    :func:`_decode_containers`)."""
     schema, reader, blocks, avro_schema = _open_container(data)
     avro_fields = {f["name"]: f["type"] for f in avro_schema.get("fields", [])}
     cols: dict[str, list] = {f.name: [] for f in schema.fields}
@@ -592,6 +575,31 @@ def _open_container(data: bytes):
             yield count, payload
 
     return schema, r, blocks(), avro_schema
+
+
+def _decode_containers(contents: Iterable[bytes], schema: T.StructType):
+    """Decode container files/messages into ONE Arrow batch conformed to
+    ``schema`` by field name (fields a container lacks are null-padded,
+    extra fields dropped — the ``AvroToPutGeoMesa`` schema-adapter
+    contract, ``AvroToPutGeoMesa.scala:60-78``).  Returns
+    ``(batch, rows per container)``; ``read_avro`` and the
+    GeoAvro-over-Kafka decode (``streaming/kafka.py``) both run on it.
+
+    The batch is built straight from the decoded Python values — NOT via
+    pandas, whose NaN-means-null convention would silently null out
+    genuine NaN floats, and whose float64 view of a null-holding integer
+    column would round int64 values above 2**53."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    acc: dict[str, list] = {f.name: [] for f in schema.fields}
+    counts: list[int] = []
+    for data in contents:
+        _schema, cols, n = _decode_container_columns(data)
+        for name, values in acc.items():
+            values.extend(cols.get(name) or [None] * n)
+        counts.append(n)
+    return pa.RecordBatch.from_pydict(acc, schema=to_arrow_schema(schema)), counts
 
 
 def read_avro_schema(path: str) -> T.StructType:
@@ -750,21 +758,10 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     else:
         files = [path]
     schema = read_avro_schema(files[0])
-    names = [f.name for f in schema.fields]
 
     def decode(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        # Arrow batches built straight from python values — NOT via pandas,
-        # whose NaN-means-null convention would silently null out genuine
-        # NaN floats at the conversion boundary.
-        arrow_schema = to_arrow_schema(schema)
         for batch in batches:
-            for content in batch.column("content"):
-                _schema, rows = _decode_container(content.as_py())
-                recs = [{n: r.get(n) for n in names} for r in rows]
-                yield pa.RecordBatch.from_pylist(recs, schema=arrow_schema)
+            yield _decode_containers(batch.column("content").to_pylist(), schema)[0]
 
     binary = (
         spark.read.format("binaryFile")

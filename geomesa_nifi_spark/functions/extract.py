@@ -1,4 +1,4 @@
-"""Vectorized extraction: html -> text, language id.  Arrow pandas UDFs.
+"""Vectorized extraction: html -> text, language id.  One Arrow UDF.
 
 This is the engine's analogue of the reference's converter transform
 language (GeoMesa converters configured in ``ConvertInputProcessor.scala``
@@ -6,12 +6,12 @@ and the expression configs in
 ``geomesa-accumulo-bundle/.../test/resources/application.conf``): the one
 genuinely non-relational, per-record transformation stage.  The reference
 runs a per-record converter loop (``PutGeoMesa.scala:84-95``); we run one
-Arrow-batched pandas UDF — no per-row Python (``input_hint``).
+Arrow-batched ``arrow_udf`` — no per-row Python (``input_hint``).
 
 Byte-identical contract: ``extract_text_bytes`` is the *reference
-implementation* — a pure function of the html bytes only.  The pandas UDF
-must produce byte-identical output per url (tested in
-tests/test_extract.py), which pins down the Arrow/pandas pitfalls: html is
+implementation* — a pure function of the html bytes only.  The Arrow
+kernel behind the UDF must produce byte-identical output per url (tested
+in tests/test_extract.py), which pins down the Arrow pitfalls: html is
 ``BinaryType`` end-to-end (never decoded by Arrow), output is built with
 ``str`` operations only, and no locale/environment-dependent call is made.
 """
@@ -21,14 +21,11 @@ from __future__ import annotations
 import html as _htmlmod
 import re
 from collections import Counter
-from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # --- pure reference implementation (bytes -> str), deterministic -----------
 
@@ -317,18 +314,7 @@ def _extract_arrow(arr):
     return x, langs
 
 
-def _extract_batch(html: pd.Series) -> pd.DataFrame:
-    """pandas wrapper over the Arrow kernel (tests and the pandas-UDF
-    fallback path use this shape)."""
-    import pyarrow as pa
-
-    texts, langs = _extract_arrow(pa.Array.from_pandas(html, type=pa.binary()))
-    out = pd.DataFrame({"text": texts.to_pandas(), "lang": langs.to_pandas()})
-    out.index = html.index
-    return out
-
-
-# --- Arrow-vectorized UDFs ---------------------------------------------------
+# --- Arrow-vectorized UDF ----------------------------------------------------
 
 _EXTRACT_SCHEMA = T.StructType(
     [
@@ -338,41 +324,14 @@ _EXTRACT_SCHEMA = T.StructType(
 )
 
 
-def _make_extract_udf():
-    """Prefer the native Arrow scalar UDF (Spark 4.1+): the batch arrives
-    and returns as ``pyarrow`` arrays, so the kernel's Arrow core runs with
-    ZERO pandas conversion on either side of the boundary.  Older runtimes
-    get the pandas_udf wrapper — same kernel, same bytes out."""
-    if hasattr(F, "arrow_udf"):
-
-        @F.arrow_udf(_EXTRACT_SCHEMA)
-        def extract_struct_arrow(html: pa.Array) -> pa.Array:
-            texts, langs = _extract_arrow(html)
-            return pa.StructArray.from_arrays([texts, langs], ["text", "lang"])
-
-        return extract_struct_arrow
-
-    @pandas_udf(_EXTRACT_SCHEMA)
-    def extract_struct_pandas(html: pd.Series) -> pd.DataFrame:
-        return _extract_batch(html)
-
-    return extract_struct_pandas
-
-
-#: one Arrow batch in, one out: text + lang computed in a single pass so
-#: the decoded text crosses the Arrow boundary exactly once; body is the
-#: vectorized kernel (byte-identical to the row-wise reference)
-extract_struct_udf = _make_extract_udf()
-
-
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_bytes, na_action="ignore")
-
-
-@pandas_udf(T.StringType())
-def detect_lang_udf(text: pd.Series) -> pd.Series:
-    return text.map(detect_lang_str, na_action="ignore")
+@F.arrow_udf(_EXTRACT_SCHEMA)
+def extract_struct_udf(html: pa.Array) -> pa.Array:
+    """One Arrow batch in, one out: text + lang computed in a single pass
+    so the decoded text crosses the Arrow boundary exactly once, with zero
+    pandas conversion on either side; the body is the vectorized kernel
+    (byte-identical to the row-wise reference)."""
+    texts, langs = _extract_arrow(html)
+    return pa.StructArray.from_arrays([texts, langs], ["text", "lang"])
 
 
 def extract_pages(df: DataFrame, html_col: str = "html") -> DataFrame:

@@ -6,7 +6,7 @@ WKT strings or WKB bytes (``records/package.scala:183-194``, property
 Point, LineString, Polygon, MultiPoint, MultiLineString, MultiPolygon and
 GeometryCollection).  The engine carries geometries as validated WKT
 strings (SURVEY.md §1.3); this module adds the WKB wire format — the hot
-point path stays vectorized numpy inside Arrow pandas UDFs; the six
+point path stays vectorized Arrow/numpy inside ``arrow_udf`` kernels; the six
 composite kinds (export-parity volume, not a merge-path shape) use a
 recursive codec driven by numpy buffer views.
 
@@ -24,11 +24,12 @@ import re
 import struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-_POINT_RE = re.compile(r"^\s*POINT\s*\(\s*(\S+)\s+(\S+)\s*\)\s*$", re.IGNORECASE)
 _WKB_POINT_LE = b"\x01\x01\x00\x00\x00"  # little-endian, type=1
 
 #: OGC type codes (99-049 §3.3.2.6)
@@ -318,94 +319,86 @@ def wkb_point_bytes(x: float, y: float) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Column-level API (Arrow pandas UDFs)
+# Column-level API (Arrow UDFs)
 # ---------------------------------------------------------------------------
+
+#: the point fast path's grammar (RE2 syntax, ASCII whitespace, ``_NUM``
+#: coordinates): every row it matches parses to the same point in
+#: :func:`parse_wkt`; all other rows take the codec
+_POINT_RE2 = rf"(?i)^\s*POINT\s*\(\s*(?P<x>{_NUM})\s+(?P<y>{_NUM})\s*\)\s*$"
+
 
 def wkt_to_wkb(col: Column | str, little: bool = True) -> Column:
     """WKT strings (any of the 7 kinds) -> WKB binary; null / malformed ->
-    null.  The dominant point kind takes a vectorized numpy path (one
-    buffer per batch); composite kinds go through the recursive codec."""
+    null.  The dominant point kind takes a vectorized path (one RE2 pass,
+    one numeric parse, one buffer per batch); composite kinds go through
+    the recursive codec."""
 
-    @F.pandas_udf("binary")
-    def _enc(s: pd.Series) -> pd.Series:
-        # vectorized fast path for points
-        coords = s.str.extract(_POINT_RE)
-        x = pd.to_numeric(coords[0], errors="coerce")
-        y = pd.to_numeric(coords[1], errors="coerce")
-        # isfinite too: pd.to_numeric parses "Infinity"/"NaN", which the
-        # WKT grammar (and the decoder's renderer) reject — emitting them
-        # would produce WKB that crashes the inverse UDF
-        is_pt = (
-            x.notna() & y.notna()
-            & np.isfinite(x.fillna(0.0)) & np.isfinite(y.fillna(0.0))
-        )
+    @F.arrow_udf(T.BinaryType())
+    def _enc(s: pa.Array) -> pa.Array:
         n = len(s)
         out: list[bytes | None] = [None] * n
-        if is_pt.any() and little:
-            m = int(is_pt.sum())
+        is_pt = np.zeros(n, dtype=bool)
+        if little:
+            # Arrow's string->double cast rounds correctly, exactly like the
+            # codec's float(), so matched rows get the codec's bytes
+            coords = pc.extract_regex(s, _POINT_RE2)
+            matched = pc.is_valid(coords)
+            is_pt = matched.to_numpy(zero_copy_only=False)
+            x, y = (
+                pc.cast(c, pa.float64()).to_numpy(zero_copy_only=False)
+                for c in coords.filter(matched).flatten()
+            )
+            m = len(x)
             buf = np.zeros((m, 21), dtype=np.uint8)
             buf[:, :5] = np.frombuffer(_WKB_POINT_LE, dtype=np.uint8)
-            buf[:, 5:13] = x[is_pt].to_numpy(dtype="<f8").view(np.uint8).reshape(m, 8)
-            buf[:, 13:21] = y[is_pt].to_numpy(dtype="<f8").view(np.uint8).reshape(m, 8)
-            for row, i in enumerate(np.flatnonzero(is_pt.to_numpy())):
+            buf[:, 5:13] = x.astype("<f8").view(np.uint8).reshape(m, 8)
+            buf[:, 13:21] = y.astype("<f8").view(np.uint8).reshape(m, 8)
+            for row, i in enumerate(np.flatnonzero(is_pt)):
                 out[i] = bytes(buf[row])
-        for i in np.flatnonzero((~is_pt).to_numpy() | (not little)):
-            v = s.iloc[int(i)]
-            if v is None or (isinstance(v, float) and pd.isna(v)):
+        rest = np.flatnonzero(~is_pt)
+        for i, v in zip(rest, s.take(pa.array(rest)).to_pylist()):
+            if v is None:
                 continue
             try:
-                out[int(i)] = encode_wkb(*parse_wkt(str(v)), little=little)
+                out[i] = encode_wkb(*parse_wkt(v), little=little)
             except ValueError:
-                out[int(i)] = None
-        return pd.Series(out)
+                out[i] = None
+        return pa.array(out, pa.binary())
 
-    return _enc(F.col(col) if isinstance(col, str) else col)
+    return _enc(col)
+
+
+@F.arrow_udf(T.StringType())
+def _wkb_to_wkt_udf(s: pa.Array) -> pa.Array:
+    n = len(s)
+    out: list[str | None] = [None] * n
+    fast_idx, fast_bytes = [], []
+    for i, bb in enumerate(s.to_pylist()):
+        if bb is None:
+            continue
+        if len(bb) == 21 and bb[:5] == _WKB_POINT_LE:
+            fast_idx.append(i)
+            fast_bytes.append(bb)
+        else:
+            try:
+                out[i] = to_wkt(*decode_wkb(bb))
+            except ValueError:
+                out[i] = None
+    if fast_idx:
+        arr = np.frombuffer(b"".join(fast_bytes), dtype=np.uint8).reshape(-1, 21)
+        xs = arr[:, 5:13].copy().view("<f8").ravel()
+        ys = arr[:, 13:21].copy().view("<f8").ravel()
+        for j, i in enumerate(fast_idx):
+            try:
+                out[i] = f"POINT ({_fmt(float(xs[j]))} {_fmt(float(ys[j]))})"
+            except ValueError:  # non-finite coordinate: malformed -> null
+                out[i] = None
+    return pa.array(out, pa.string())
 
 
 def wkb_to_wkt(col: Column | str) -> Column:
     """WKB binary (any kind, either byte order) -> WKT string; null /
     malformed -> null.  The 21-byte little-endian point path decodes from
     one numpy view per batch; everything else goes through the codec."""
-
-    @F.pandas_udf("string")
-    def _dec(s: pd.Series) -> pd.Series:
-        n = len(s)
-        out: list[str | None] = [None] * n
-        fast_idx, fast_bytes = [], []
-        for i, b in enumerate(s):
-            if b is None:
-                continue
-            bb = bytes(b)
-            if len(bb) == 21 and bb[:5] == _WKB_POINT_LE:
-                fast_idx.append(i)
-                fast_bytes.append(bb)
-            else:
-                try:
-                    out[i] = to_wkt(*decode_wkb(bb))
-                except ValueError:
-                    out[i] = None
-        if fast_idx:
-            arr = np.frombuffer(b"".join(fast_bytes), dtype=np.uint8).reshape(-1, 21)
-            xs = arr[:, 5:13].copy().view("<f8").ravel()
-            ys = arr[:, 13:21].copy().view("<f8").ravel()
-            for j, i in enumerate(fast_idx):
-                try:
-                    out[i] = f"POINT ({_fmt(float(xs[j]))} {_fmt(float(ys[j]))})"
-                except ValueError:  # non-finite coordinate: malformed -> null
-                    out[i] = None
-        return pd.Series(out)
-
-    return _dec(F.col(col) if isinstance(col, str) else col)
-
-
-# round-3 names, kept for callers/tests: point-only entry points now route
-# through the full codec (and inherit the strict endianness check)
-def wkt_point_to_wkb(col: Column | str) -> Column:
-    """WKT ``POINT (x y)`` -> WKB (vectorized); non-point kinds also encode
-    now that the codec is complete."""
-    return wkt_to_wkb(col)
-
-
-def wkb_point_to_wkt(col: Column | str) -> Column:
-    """WKB -> WKT (both byte orders, all kinds, strict endianness check)."""
-    return wkb_to_wkt(col)
+    return _wkb_to_wkt_udf(col)

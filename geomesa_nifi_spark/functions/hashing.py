@@ -5,7 +5,7 @@ The reference hashes ``featureId + ":" + attr0 + ":" + attr1 ...`` with
 commons-codec ``MurmurHash3.hash128`` (x64 variant, the library's default
 seed 104729) and renders big-endian(h1) ++ big-endian(h2) as a 32-char hex
 fid.  ``murmur3_fid`` reproduces those bytes exactly with a VECTORIZED
-numpy implementation of MurmurHash3 x64/128 inside an Arrow pandas UDF (no
+numpy implementation of MurmurHash3 x64/128 inside an ``arrow_udf`` (no
 dependency, no per-row Python in the block mixing — rows advance through
 the block loop in lock-step with masking).  ``fid_hash`` keeps the
 JVM-codegen'd variants (md5 default — cross-engine checkable in DuckDB —
@@ -17,9 +17,10 @@ partitionings.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: commons-codec MurmurHash3.hash128(byte[]) seeds with 104729 (its
 #: documented quirk), which is therefore what the reference's fids use.
@@ -122,6 +123,12 @@ def murmur3_128_hex(data: list[bytes], seed: int = COMMONS_CODEC_DEFAULT_SEED) -
     return [f"{int(a):016x}{int(b):016x}" for a, b in zip(h1, h2)]
 
 
+@F.arrow_udf(T.StringType())
+def _murmur3_hex_udf(s: pa.Array) -> pa.Array:
+    """Arrow batch of joined fid strings -> their reference murmur3 fids."""
+    return pa.array(murmur3_128_hex([v.encode("utf-8") for v in s.to_pylist()]), pa.string())
+
+
 #: java.util.Date.toString pattern ("Wed May 06 00:00:00 UTC 2015") — the
 #: rendering the reference's Scala ``attr.toString`` produces for the common
 #: Date-typed dtg attribute (``GetGeoMesaKafkaRecord.scala:468`` string-joins
@@ -153,13 +160,7 @@ def murmur3_fid(id_col: Column | str, *attr_cols: Column | str) -> Column:
         )
         for c in (id_col, *attr_cols)
     ]
-    joined = F.concat_ws(":", *parts)
-
-    @F.pandas_udf("string")
-    def _mm3(s: pd.Series) -> pd.Series:
-        return pd.Series(murmur3_128_hex([v.encode("utf-8") for v in s]))
-
-    return _mm3(joined)
+    return _murmur3_hex_udf(F.concat_ws(":", *parts))
 
 
 def murmur3_fid_df(df: DataFrame, id_col: str, *attr_cols: str) -> Column:
@@ -198,11 +199,7 @@ def fid_hash(*cols: Column | str, algo: str = "md5") -> Column:
     if algo == "sha2":
         return F.sha2(joined, 256)
     if algo == "murmur3":
-        @F.pandas_udf("string")
-        def _mm3(s: pd.Series) -> pd.Series:
-            return pd.Series(murmur3_128_hex([v.encode("utf-8") for v in s]))
-
-        return _mm3(joined)
+        return _murmur3_hex_udf(joined)
     raise ValueError(f"unknown fid hash algo {algo!r}")
 
 

@@ -1,11 +1,10 @@
 """Multimodal columns: images/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing here is real and tested — schemas, Arrow batch
-shapes, ``mapInPandas`` partition flow, deterministic feature vectors — but
-the actual media *decoding* is stubbed: the container has no image/audio
-libraries, so ``decode="real"`` raises ``NotImplementedError`` and the
-default ``decode="fake"`` derives a deterministic pseudo-feature from the
-payload bytes (stable across runs/partitionings, so tests and oracles hold).
+shapes, ``mapInArrow`` partition flow, deterministic feature vectors — but
+the actual media *decoding* is stubbed: there are no image/audio codecs, so
+the extractor derives a deterministic pseudo-feature from the payload bytes
+(stable across runs/partitionings, so tests and oracles hold).
 
 At scale the pattern is the one that matters: binary column stays opaque to
 Catalyst (never cast to string), work happens in Arrow-batched Python with
@@ -19,7 +18,7 @@ import hashlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,39 +53,31 @@ def _fake_features(payload: bytes) -> np.ndarray:
     return (raw.astype(np.float32) / 65536.0)[:FEATURE_DIM]
 
 
-def _decode_real(payload: bytes, kind: str):  # pragma: no cover - stub
-    raise NotImplementedError(
-        "real media decoding requires image/audio codecs not present in this "
-        "environment; run with decode='fake' or install codecs and implement here"
-    )
+def extract_media_features(df: DataFrame) -> DataFrame:
+    """``mapInArrow`` feature extraction: one Arrow batch in, one out."""
 
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-def extract_media_features(df: DataFrame, decode: str = "fake") -> DataFrame:
-    """``mapInPandas`` feature extraction: one Arrow batch in, one out."""
-    if decode not in ("fake", "real"):
-        raise ValueError(f"decode must be 'fake' or 'real', got {decode}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            if decode == "real":
-                _decode_real(payloads.iloc[0], pdf["kind"].iloc[0])
-            feats = [
-                None if p is None else _fake_features(bytes(p)).tolist() for p in payloads
-            ]
-            yield pd.DataFrame(
+        arrow_schema = to_arrow_schema(FEATURES_SCHEMA)
+        for batch in batches:
+            payloads = batch.column("payload").to_pylist()
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": payloads.map(lambda p: 0 if p is None else len(p)).astype("int32"),
-                    "content_sha": payloads.map(
-                        lambda p: None if p is None else hashlib.sha256(bytes(p)).hexdigest()
-                    ),
-                    "features": feats,
-                }
+                    "media_id": batch.column("media_id"),
+                    "kind": batch.column("kind"),
+                    "n_bytes": [0 if p is None else len(p) for p in payloads],
+                    "content_sha": [
+                        None if p is None else hashlib.sha256(p).hexdigest() for p in payloads
+                    ],
+                    "features": [
+                        None if p is None else _fake_features(p).tolist() for p in payloads
+                    ],
+                },
+                schema=arrow_schema,
             )
 
-    return df.mapInPandas(run, schema=FEATURES_SCHEMA)
+    return df.mapInArrow(run, FEATURES_SCHEMA)
 
 
 def synthetic_media(spark, n: int = 100, seed: int = 42) -> DataFrame:

@@ -169,8 +169,9 @@ def orphans_df(table: LakeTable, min_age_s: float = 3600.0) -> DataFrame:
     file regardless of age.
 
     Scope note: this walks ``data/`` only.  ``vacuum()`` additionally
-    GCs unreferenced ledger manifests; those (tiny, bounded by commit
-    attempts) are not listed here."""
+    GCs unreferenced ledger manifests and tmp files stranded by crashed
+    commits; those (tiny, bounded by commit attempts) are not listed
+    here."""
     import time as _time
 
     now = _time.time()

@@ -60,6 +60,12 @@ OP_DELETE = "delete"
 #: update_by_attribute; beyond it the zone-map pruning is skipped (same
 #: guard shape as visibility's MAX_DISTINCT_LABELS)
 MAX_LOOKUP_VALUES = 10_000
+#: ``join_strategy="auto"`` broadcasts the deduped batch only below this
+#: cached size (see :func:`_pick_join_strategy`)
+BROADCAST_THRESHOLD_BYTES = 64 * 1024 * 1024
+#: CoW merges re-executed against the new snapshot after a CommitConflict
+#: before the conflict propagates
+REDO_ATTEMPTS = 8
 
 
 @dataclass
@@ -76,7 +82,6 @@ def merge_changes(
     op_col: str = OP_COL_DEFAULT,
     update_mode: str = "full",
     compat_mode: evolution.CompatibilityMode = evolution.CompatibilityMode.UPDATE,
-    dedup_strategy: str = "maxby",
     lineage: dict | None = None,
     collect_metrics: bool = True,
     max_records_per_file: int = 2_000_000,
@@ -84,8 +89,6 @@ def merge_changes(
     auto_compact: bool = True,
     post_dedup_transform=None,
     join_strategy: str = "auto",
-    broadcast_threshold_bytes: int = 64 * 1024 * 1024,
-    redo_attempts: int = 8,
 ) -> MergeResult:
     """Apply a batch of change events to the table, exactly once.
 
@@ -106,7 +109,7 @@ def merge_changes(
     ``join_strategy`` (CoW only): ``"auto"`` (default) picks
     ``"broadcast"`` — the resolution decomposed into broadcast joins with
     ZERO shuffle of the target side — when the deduped batch's cached size
-    is under ``broadcast_threshold_bytes`` AND the touched-bucket target
+    is under ``BROADCAST_THRESHOLD_BYTES`` AND the touched-bucket target
     holds ≥``BROADCAST_MIN_TARGET_RATIO``× the batch's rows (from ledger
     metadata, no extra job); else the ``"full_outer"`` sort-merge join.
     At 100 TB the touched-bucket target of a CDC batch is orders of
@@ -140,7 +143,7 @@ def merge_changes(
     # ---- LWW dedup to one row per key --------------------------------------
     # Runs before the reconcile casts: the comparison is source-internal, so
     # it is type-consistent whatever the incoming timestamp flavor is.
-    src = lww_dedup(source, key, order_cols, strategy=dedup_strategy)
+    src = lww_dedup(source, key, order_cols, strategy="maxby")
     if op_col not in src.columns:
         src = src.withColumn(op_col, F.lit("upsert"))
     if post_dedup_transform is not None:
@@ -207,9 +210,9 @@ def merge_changes(
             if f.kind == "base"
         )
         strategy = _pick_join_strategy(
-            src, join_strategy, broadcast_threshold_bytes, tgt_rows
+            src, join_strategy, BROADCAST_THRESHOLD_BYTES, tgt_rows
         )
-        for attempt in range(redo_attempts):
+        for attempt in range(REDO_ATTEMPTS):
             try:
                 return _merge_prepared(
                     table, src, touched, base, rec, final_schema, batch_id, op_col,
@@ -217,7 +220,7 @@ def merge_changes(
                     max_records_per_file, join_strategy=strategy,
                 )
             except CommitConflict:
-                if attempt == redo_attempts - 1:
+                if attempt == REDO_ATTEMPTS - 1:
                     raise
                 # a concurrent commit rewrote one of OUR buckets with NEW
                 # logical content: the join we executed is stale — redo the
@@ -254,7 +257,7 @@ def merge_changes(
                         if f.kind == "base"
                     )
                     strategy = _pick_join_strategy(
-                        src, join_strategy, broadcast_threshold_bytes, tgt_rows
+                        src, join_strategy, BROADCAST_THRESHOLD_BYTES, tgt_rows
                     )
         raise AssertionError("unreachable")
     finally:

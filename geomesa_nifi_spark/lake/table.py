@@ -1336,15 +1336,21 @@ class LakeTable:
                     os.unlink(full)
                     removed.append(rel)
         # Manifest GC: losing commit attempts and expired snapshots leave
-        # immutable m-*.json files no remaining snapshot cites.
+        # immutable m-*.json files no remaining snapshot cites.  A crash
+        # between staging and publishing a manifest, or before linking a
+        # snapshot header, strands its *.json.tmp.<pid> file instead.
         from geomesa_nifi_spark.lake.ledger import MANIFEST_PREFIX
         for name in os.listdir(self.ledger.dir):
-            if (
+            orphan_manifest = (
                 name.startswith(MANIFEST_PREFIX)
                 and name.endswith(".json")
                 and name not in live_manifests
+            )
+            if (
+                (orphan_manifest or ".json.tmp." in name)
                 # manifests are written BEFORE the O_EXCL version link: the
-                # same staging window as data files, same grace
+                # same staging window as data files, same grace (a live
+                # writer's tmp files are younger still)
                 and not _in_grace(os.path.join(self.ledger.dir, name))
             ):
                 os.unlink(os.path.join(self.ledger.dir, name))

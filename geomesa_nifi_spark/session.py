@@ -3,8 +3,9 @@
 Local-mode settings mirror what we would set on a real cluster: AQE on
 (runtime skew-join splitting + partition coalescing), shuffle partitions
 sized to the parallelism rather than the 200 default, Arrow enabled for
-the pandas-UDF extraction stage, and UTC session time so timestamp
-round-trips are deterministic.
+the driver-side pandas conversions (the Python UDF boundary is
+``arrow_udf``/``mapInArrow`` throughout), and UTC session time so
+timestamp round-trips are deterministic.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ def _ship_package(spark: SparkSession) -> None:
 
     Equivalent to ``spark-submit --py-files geomesa_nifi_spark.zip`` on a
     real cluster: zip this package and register it via ``addPyFile`` so
-    pandas UDFs deserialize anywhere, regardless of the driver's cwd.
+    Arrow UDFs deserialize anywhere, regardless of the driver's cwd.
     """
     app_id = spark.sparkContext.applicationId
     if app_id in _PYFILES_SHIPPED:

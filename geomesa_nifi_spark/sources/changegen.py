@@ -191,7 +191,13 @@ def change_stream(
     ``text``/``lang`` columns instead — byte-identical to what extraction
     would produce, but generated JVM-side; used by benchmarks that measure
     MERGE throughput in isolation.
+
+    ``seed`` must lie in ``[0, 2**31)``: the text kernel hashes it as a
+    32-bit int, which is what ``F.lit(seed)`` is on the JVM path only in
+    that range (above it the literal is a long and the two paths diverge).
     """
+    if not 0 <= seed < 2**31:
+        raise ValueError(f"seed must be in [0, 2**31), got {seed}")
     if n_keys is None:
         n_keys = max(n_events // 4, 16)
 

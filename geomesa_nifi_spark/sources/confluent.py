@@ -24,7 +24,7 @@ fields drop) — the same by-name adaptation contract as the GeoAvro
 container path (``AvroToPutGeoMesa.scala:60-78``).
 
 Scale shape: encode/decode are per-record Python over Arrow batches
-(``mapInArrow``/``mapInPandas``), one task per input partition, no
+(``mapInArrow``), one task per input partition, no
 shuffle — the same measured ceiling as the GeoAvro container decode
 (``bench.py`` kafka_avro section; ~19k ev/s/core).  Registry-framed
 topics are one-record-per-message by construction, so there is no
@@ -178,11 +178,11 @@ def confluent_decode_records(
             T.StructField("_kafka_offset", T.LongType()),
         ]
     out_schema = T.StructType(out_fields)
-    out_names = [f.name for f in out_fields]
     reader_names = [f.name for f in value_schema.fields]
 
     def decode(batches):
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from geomesa_nifi_spark.functions.avro import (
             _Reader,
@@ -208,12 +208,12 @@ def confluent_decode_records(
                 plans[sid] = plan
             return plan
 
-        for pdf in batches:
-            acc: dict[str, list] = {n: [] for n in out_names}
-            for v, p, o in zip(pdf["value"], pdf["partition"], pdf["offset"]):
-                if v is None:
-                    continue  # compaction tombstone: no payload
-                raw = bytes(v)
+        arrow_schema = to_arrow_schema(out_schema)
+        for batch in batches:
+            acc: dict[str, list] = {n: [] for n in reader_names}
+            # compaction tombstones (null values) were filtered out before
+            # the boundary, so every message yields exactly one record
+            for raw in batch.column("value").to_pylist():
                 if len(raw) < 5 or raw[0] != CONFLUENT_MAGIC:
                     raise SchemaRegistryError(
                         "value is not Confluent-framed (expected magic 0x00 "
@@ -225,13 +225,13 @@ def confluent_decode_records(
                 rec = {name: dec(r) for name, dec in plan_for(sid)}
                 for n in reader_names:
                     acc[n].append(rec.get(n))
-                if include_lineage:
-                    acc["_kafka_partition"].append(p)
-                    acc["_kafka_offset"].append(o)
-            yield pd.DataFrame(acc, columns=out_names)
+            if include_lineage:
+                acc["_kafka_partition"] = batch.column("partition")
+                acc["_kafka_offset"] = batch.column("offset")
+            yield pa.RecordBatch.from_pydict(acc, schema=arrow_schema)
 
     return (
         df.filter(F.col("value").isNotNull())
         .select("value", "partition", "offset")
-        .mapInPandas(decode, out_schema)
+        .mapInArrow(decode, out_schema)
     )

@@ -218,33 +218,27 @@ def kafka_records_to_changes(
             T.StructField("_kafka_offset", T.LongType()),
         ]
     out_schema = T.StructType(out_fields)
-    names = [f.name for f in value_schema.fields]
+    out_names = [f.name for f in out_fields]
 
     def decode(batches):
-        import pandas as pd
+        import numpy as np
+        import pyarrow as pa
 
-        from geomesa_nifi_spark.functions.avro import _decode_container_columns
+        from geomesa_nifi_spark.functions.avro import _decode_containers
 
-        for pdf in batches:
-            # column-wise assembly: decoders append straight into per-column
-            # lists and ONE DataFrame is built per Arrow batch from the
-            # columns dict (pandas' fast constructor) — no per-record dicts
-            acc: dict[str, list] = {n: [] for n in names}
-            parts: list = []
-            offs: list = []
-            for v, p, o in zip(pdf["value"], pdf["partition"], pdf["offset"]):
-                _schema, cols_msg, n_rows = _decode_container_columns(bytes(v))
-                for n in names:
-                    acc[n].extend(cols_msg.get(n) or [None] * n_rows)
-                if include_lineage:
-                    parts.extend([p] * n_rows)
-                    offs.extend([o] * n_rows)
+        for batch in batches:
+            out, counts = _decode_containers(batch.column("value").to_pylist(), value_schema)
             if include_lineage:
-                acc["_kafka_partition"] = parts
-                acc["_kafka_offset"] = offs
-            yield pd.DataFrame(acc, columns=[f.name for f in out_fields])
+                # each message's coordinates, repeated once per record it holds
+                owner = pa.array(np.repeat(np.arange(len(counts)), counts))
+                out = pa.RecordBatch.from_arrays(
+                    out.columns
+                    + [batch.column("partition").take(owner), batch.column("offset").take(owner)],
+                    names=out_names,
+                )
+            yield out
 
-    return df.select("value", "partition", "offset").mapInPandas(decode, out_schema)
+    return df.select("value", "partition", "offset").mapInArrow(decode, out_schema)
 
 
 def read_kafka_stream(spark, config: dict):

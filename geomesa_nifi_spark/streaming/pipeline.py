@@ -105,7 +105,6 @@ def run_file_replay(
     extract_stage: str = "post_dedup",  # post_dedup | pre
     write_mode: str = "merge",  # merge (CoW) | mor | append
     compat_mode: CompatibilityMode = CompatibilityMode.UPDATE,
-    dedup_strategy: str = "maxby",
     metrics_path: str | None = None,
     collect_metrics: bool = True,
     fail_after_batches: int | None = None,
@@ -249,7 +248,6 @@ def run_file_replay(
                 prepared,
                 batch_id=batch_id,
                 compat_mode=compat_mode,
-                dedup_strategy=dedup_strategy,
                 lineage=lineage,
                 collect_metrics=collect_metrics,
                 mode="mor" if write_mode == "mor" else "cow",

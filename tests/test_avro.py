@@ -311,9 +311,9 @@ def test_foreign_millis_timestamps_decode_correctly(spark, tmp_path):
         return 1
 
     data = _handmade_container(schema_json, fill)
-    schema, rows = A._decode_container(data)
+    schema, cols, _n = A._decode_container_columns(data)
     assert schema["ts"].dataType == T.TimestampType()
-    got = rows[0]["ts"]
+    got = cols["ts"][0]
     assert got == datetime.datetime(
         2020, 9, 13, 12, 26, 40, 123000, tzinfo=datetime.timezone.utc
     )

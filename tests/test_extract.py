@@ -57,9 +57,9 @@ def test_batch_kernel_fuzz_byte_identical():
     invalid UTF-8, nulls — every fallback route and every fast path."""
     import random
 
-    import pandas as pd
+    import pyarrow as pa
 
-    from geomesa_nifi_spark.functions.extract import _extract_batch
+    from geomesa_nifi_spark.functions.extract import _extract_arrow
 
     random.seed(123)
     ws = ["\x1c", "\x1d", "\x1e", "\x1f", "\x85", "\xa0", " ", " ",
@@ -82,15 +82,33 @@ def test_batch_kernel_fuzz_byte_identical():
             b += b"\xff\xfe"
         docs.append(b)
     docs += [None, b""]
-    out = _extract_batch(pd.Series(docs, dtype=object))
-    for i, d in enumerate(docs):
+    texts, langs = _extract_arrow(pa.array(docs, pa.binary()))
+    for d, got_t, got_l in zip(docs, texts.to_pylist(), langs.to_pylist()):
         want_t = extract_text_bytes(d)
         want_l = detect_lang_str(want_t)
-        got_t, got_l = out["text"].iat[i], out["lang"].iat[i]
-        got_t = None if got_t is None or (isinstance(got_t, float)) else got_t
-        got_l = None if got_l is None or (isinstance(got_l, float)) else got_l
         assert got_t == want_t, (d, got_t, want_t)
         assert got_l == want_l, (d, got_l, want_l)
+
+
+def test_python_boundary_is_arrow_only():
+    """Every Python function in the package takes and returns Arrow; pandas
+    appears only in streaming/stateful.py, whose applyInPandasWithState has
+    no Arrow equivalent."""
+    import pathlib
+    import re
+
+    import geomesa_nifi_spark
+
+    pkg = pathlib.Path(geomesa_nifi_spark.__file__).parent
+    pandas_boundary = re.compile(r"pandas_udf|mapInPandas|PandasUDFType|import pandas")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "streaming/stateful.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if pandas_boundary.search(line)
+    ]
+    assert not hits, hits
 
 
 def test_generator_roundtrip_and_determinism(spark):
@@ -146,6 +164,19 @@ def test_generator_vectorized_text_matches_jvm(spark):
         assert new.exceptAll(old).count() == 0
         assert old.exceptAll(new).count() == 0
         assert len(old_rows) == 2000
+
+
+def test_generator_seed_range(spark):
+    """Seeds outside [0, 2**31) fail loudly: a negative one would overflow
+    the text kernel, and one >= 2**31 would make the JVM reference path
+    hash a long where the kernel hashes an int."""
+    import pytest
+
+    for bad in (-1, 2**31):
+        with pytest.raises(ValueError, match="seed"):
+            change_stream(spark, 10, seed=bad)
+    for ok in (0, 2**31 - 1):
+        assert change_stream(spark, 10, seed=ok).count() == 10
 
 
 def test_generator_skew_exists(spark):

@@ -14,9 +14,7 @@ from geomesa_nifi_spark.functions.geometry import (
     parse_wkt,
     to_wkt,
     wkb_point_bytes,
-    wkb_point_to_wkt,
     wkb_to_wkt,
-    wkt_point_to_wkb,
     wkt_to_wkb,
 )
 
@@ -83,8 +81,8 @@ def test_wkt_wkb_roundtrip(spark):
     df = spark.createDataFrame(rows_in, "k string, wkt string")
     out = df.select(
         "k", "wkt",
-        wkt_point_to_wkb("wkt").alias("wkb"),
-    ).select("k", "wkt", "wkb", wkb_point_to_wkt("wkb").alias("back")).collect()
+        wkt_to_wkb("wkt").alias("wkb"),
+    ).select("k", "wkt", "wkb", wkb_to_wkt("wkb").alias("back")).collect()
     rows = {r["k"]: r for r in out}
     assert bytes(rows["a"]["wkb"]) == wkb_point_bytes(-100.2365, 23.0)
     assert rows["a"]["back"] == "POINT (-100.2365 23)"
@@ -93,6 +91,18 @@ def test_wkt_wkb_roundtrip(spark):
     assert rows["bad"]["wkb"] is None  # malformed: null, not garbage
     for i, w in enumerate(ALL_KINDS):
         assert rows[f"g{i}"]["back"] == w
+
+
+def test_point_fast_path_parses_like_the_codec(spark):
+    """Shortest-repr coordinates encode to exactly their own 8 bytes: the
+    vectorized point path parses correctly rounded, like the codec."""
+    import random
+
+    rng = random.Random(3)
+    pts = [(rng.uniform(-1e6, 1e6), rng.uniform(-90, 90)) for _ in range(200)]
+    df = spark.createDataFrame([(f"POINT ({x!r} {y!r})",) for x, y in pts], "wkt string")
+    got = [bytes(r["b"]) for r in df.select(wkt_to_wkb("wkt").alias("b")).collect()]
+    assert got == [wkb_point_bytes(x, y) for x, y in pts]
 
 
 def test_wkt_wkb_roundtrip_big_endian(spark):
@@ -107,7 +117,7 @@ def test_wkt_wkb_roundtrip_big_endian(spark):
 def test_wkb_big_endian_decodes(spark):
     be = b"\x00" + struct.pack(">I", 1) + struct.pack(">dd", 1.5, 2.5)
     df = spark.createDataFrame([(bytearray(be),)], "wkb binary")
-    r = df.select(wkb_point_to_wkt("wkb").alias("w")).first()
+    r = df.select(wkb_to_wkt("wkb").alias("w")).first()
     assert r["w"] == "POINT (1.5 2.5)"
 
 
@@ -154,4 +164,4 @@ def test_deep_nesting_rejected_not_recursion_error():
 def test_mixed_endianness_null_in_column(spark):
     bad = b"\x01" + b"\x00\x00\x00\x01" + struct.pack("<dd", 1.0, 2.0)
     df = spark.createDataFrame([(bytearray(bad),)], "wkb binary")
-    assert df.select(wkb_point_to_wkt("wkb").alias("w")).first()["w"] is None
+    assert df.select(wkb_to_wkt("wkb").alias("w")).first()["w"] is None

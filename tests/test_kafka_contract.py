@@ -540,3 +540,42 @@ def test_confluent_bad_framing_and_unknown_id(spark):
     # registry itself fails loudly on an empty subject
     with _pytest.raises(SchemaRegistryError, match="no versions"):
         InMemorySchemaRegistry().latest("nope")
+
+
+def test_avro_value_formats_keep_nan_and_exact_int64(spark):
+    """One batch mixing a NaN double with a null one, and a large int64 with
+    a null one, decodes exactly through both Avro value formats: NaN stays
+    NaN (not null) and 2**62 + 1 is not rounded through float64."""
+    import math
+
+    from geomesa_nifi_spark.functions.avro import _encode_container
+
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("score", T.DoubleType()),
+            T.StructField("big", T.LongType()),
+        ]
+    )
+    rows = [
+        {"url": "a", "score": float("nan"), "big": 2**62 + 1},
+        {"url": "b", "score": 1.5, "big": None},
+    ]
+    ts = dt.datetime(2024, 1, 1)
+    reg, _sid, frames = _registry_and_frame(rows, schema=schema)
+    cases = {
+        "avro": ([(b"k", _encode_container(schema, rows), "pages", 0, 7, ts, 0)], {}),
+        "confluent": (
+            [(b"a", frames[0], "pages", 0, 7, ts, 0), (b"b", frames[1], "pages", 0, 8, ts, 0)],
+            {"registry": reg},
+        ),
+    }
+    for fmt, (kafka_rows, kw) in cases.items():
+        # one partition: both records share one Arrow batch
+        df = spark.createDataFrame(kafka_rows, KAFKA_RECORD_SCHEMA).coalesce(1)
+        out = kafka_records_to_changes(df, schema, value_format=fmt, **kw)
+        got = {r["url"]: r for r in out.collect()}
+        score = got["a"]["score"]
+        assert score is not None and math.isnan(score), (fmt, score)
+        assert got["a"]["big"] == 2**62 + 1, (fmt, got["a"]["big"])
+        assert got["b"]["score"] == 1.5 and got["b"]["big"] is None, fmt

@@ -161,6 +161,31 @@ def test_vacuum_collects_orphan_and_expired_manifests(spark, tmp_path):
     assert t2.scan().count() == 40  # state intact after GC
 
 
+def test_vacuum_reclaims_crashed_commit_tmp_files(spark, tmp_path):
+    """A commit that dies between staging and publishing its manifests, or
+    before linking its snapshot header, strands *.json.tmp.<pid> files in
+    the ledger: vacuum reclaims them once past the grace period, and
+    leaves them alone inside it (a live writer may still own them)."""
+    t = _table(spark, tmp_path)
+    merge_changes(t, spark.createDataFrame([page(i) for i in range(20)], PAGES), batch_id="b0")
+    led_dir = os.path.join(t.root, "_ledger")
+    _ref, staged, _files = t.ledger._stage_manifest(999, 0, "base", [])
+    header = os.path.join(led_dir, f"v{999:012d}.json.tmp.{os.getpid()}")
+    with open(header, "w") as fh:
+        json.dump({"version": 999}, fh)
+    planted = {os.path.basename(staged), os.path.basename(header)}
+    assert all(".json.tmp." in n for n in planted)
+
+    assert t.vacuum() == []  # inside the default grace period
+    assert planted <= set(os.listdir(led_dir))
+    for n in planted:
+        os.utime(os.path.join(led_dir, n), (1, 1))
+    removed = {os.path.basename(p) for p in t.vacuum()}
+    assert planted <= removed
+    assert not planted & set(os.listdir(led_dir))
+    assert t.scan().count() == 20
+
+
 def test_conflict_loser_rebases_and_reuses_winner_manifests(spark, tmp_path):
     t = _table(spark, tmp_path)
     append_only(t, spark.createDataFrame([page(i) for i in range(60)], PAGES), batch_id="b0")

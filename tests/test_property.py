@@ -116,7 +116,6 @@ def test_wkb_decoder_never_misdecodes_garbage(buf):
 from pyspark.sql import types as T  # noqa: E402  (pure type objects, no session)
 
 from geomesa_nifi_spark.functions.avro import (  # noqa: E402
-    _decode_container,
     _decode_container_columns,
     _encode_container,
 )
@@ -146,13 +145,10 @@ avro_row = st.fixed_dictionaries(
 @given(st.lists(avro_row, max_size=20), st.sampled_from(["null", "deflate"]))
 def test_avro_container_roundtrip(rows, codec):
     data = _encode_container(AVRO_SCHEMA, rows, codec=codec, block_rows=7)
-    schema, back = _decode_container(data)
+    schema, cols, n = _decode_container_columns(data)
     assert schema == AVRO_SCHEMA
-    assert back == rows
-    # the column-wise decoder agrees with the row decoder exactly
-    _schema2, cols, n = _decode_container_columns(data)
     assert n == len(rows)
-    assert [dict(zip(cols, vals)) for vals in zip(*cols.values())] == rows if rows else n == 0
+    assert [dict(zip(cols, vals)) for vals in zip(*cols.values())] == rows
 
 
 @settings(max_examples=100, deadline=None)
@@ -164,8 +160,8 @@ def test_avro_container_roundtrip(rows, codec):
 def test_avro_nan_and_float_bits_roundtrip(values):
     rows = [{"d": v} for v in values]
     schema = T.StructType([T.StructField("d", T.DoubleType())])
-    _s, back = _decode_container(_encode_container(schema, rows))
-    for want, got in zip(values, (r["d"] for r in back)):
+    _s, cols, _n = _decode_container_columns(_encode_container(schema, rows))
+    for want, got in zip(values, cols["d"]):
         if math.isnan(want):
             assert math.isnan(got)
         else:
