@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geomesa_nifi_spark.lake.ledger import CommitConflict, Snapshot
 from geomesa_nifi_spark.lake.merge import MergeResult
 from geomesa_nifi_spark.lake.table import BUCKET_COL, DELETED_COL, LakeTable
 from geomesa_nifi_spark.operators.dedup import lww_dedup
@@ -131,54 +130,38 @@ def bootstrap_load(
         sort_exprs = cluster_sort_exprs(
             out, list(cluster_by), bits=cluster_bits or DEFAULT_BITS
         )
-    new_files = table.write_files(
-        out, base.version + 1, max_records_per_file, sort_exprs=sort_exprs
+    files_for = table.appender(
+        out, nb, max_records_per_file=max_records_per_file, sort_exprs=sort_exprs
     )
 
-    summary = {
-        "operation": "bootstrap",
-        **({"clustered_by": list(cluster_by)} if cluster_by else {}),
-        "batch_id": str(batch_id),
-        "rows_written": sum(f.rows for f in new_files),
-        HWM_KEY: int(offset_hwm) if offset_hwm is not None else None,
-        "lineage": lineage or {},
-    }
     # The empty-table requirement makes a lost commit race almost always a
-    # rescale or property commit; rebase like append_only (reuse the files,
-    # re-verify emptiness) rather than rewriting.
-    for _attempt in range(10):
-        try:
-            snap = table.ledger.commit(
-                Snapshot(
-                    version=table.ledger.next_version(),
-                    schema_json=base.schema_json,
-                    files=base.files + new_files,
-                    properties=dict(base.properties),
-                    summary=summary,
-                    parent_version=base.version,
-                    branch=table.branch,
-                )
+    # rescale or property commit: re-verify emptiness and re-commit the same
+    # files (table.appender rewrites them only under a changed modulus).
+    def build(b):
+        if b.files:
+            raise ValueError(
+                "bootstrap_load lost the commit race to a data commit: "
+                "the table is no longer empty"
             )
-            return MergeResult(snapshot=snap, metrics={"bootstrapped": summary["rows_written"]})
-        except CommitConflict:
-            base = table.snapshot()
-            if str(batch_id) in table.committed_batch_ids():
-                return MergeResult(snapshot=None, skipped=True, metrics={"reason": "batch_committed"})
-            if base.files:
-                raise ValueError(
-                    "bootstrap_load lost the commit race to a data commit: "
-                    "the table is no longer empty"
-                )
-            new_nb = int(base.properties["num_buckets"])
-            if new_nb != nb:
-                nb = new_nb
-                new_files = table.write_files(
-                    out.withColumn(BUCKET_COL, table.bucket_expr(num_buckets=nb)),
-                    base.version + 1,
-                    max_records_per_file,
-                    sort_exprs=sort_exprs,
-                )
-    raise CommitConflict("bootstrap: lost the commit race 10 times")
+        new_files = files_for(b)
+        return {
+            "schema_json": b.schema_json,
+            "files": new_files,
+            "properties": dict(b.properties),
+            "summary": {
+                "operation": "bootstrap",
+                **({"clustered_by": list(cluster_by)} if cluster_by else {}),
+                "batch_id": str(batch_id),
+                "rows_written": sum(f.rows for f in new_files),
+                HWM_KEY: int(offset_hwm) if offset_hwm is not None else None,
+                "lineage": lineage or {},
+            },
+        }
+
+    snap = table.optimistic_commit(build, base, batch_id=batch_id)
+    if snap is None:
+        return MergeResult(snapshot=None, skipped=True, metrics={"reason": "batch_committed"})
+    return MergeResult(snapshot=snap, metrics={"bootstrapped": snap.summary["rows_written"]})
 
 
 def bootstrap_hwm(table: LakeTable) -> int | None:

@@ -3,8 +3,10 @@
 This plays the role that Iceberg's metadata/snapshot files would play if the
 runtime jars were available: every commit writes an immutable JSON snapshot
 file ``_ledger/v{version:012d}.json`` created with O_EXCL, so exactly one
-writer can claim a version (optimistic concurrency — the loser re-reads and
-retries).  A snapshot names the live data files (with per-file bucket +
+writer can claim a version (optimistic concurrency — the loser gets
+:class:`CommitConflict`; every writer retries through the one loop
+``LakeTable.optimistic_commit``, which rebuilds on the new head).  A
+snapshot names the live data files (with per-file bucket +
 row-count + zone-map stats for pruning), the table schema at that version,
 and a free-form summary carrying the CDC lineage: source batch id, offset
 ranges, and row counts.
@@ -598,9 +600,10 @@ class Ledger:
         differs from the parent snapshot's, re-references the parent's
         manifest for every unchanged group, then publishes the snapshot
         header with O_EXCL create: if the target version file already
-        exists another writer won the race -> CommitConflict (caller
-        re-reads and retries on top of the new state; its orphaned
-        manifests are collected by vacuum).
+        exists another writer won the race -> CommitConflict.  This method
+        makes one attempt; ``LakeTable.optimistic_commit`` re-reads the
+        head and rebuilds on top of it (the loser's orphaned manifests are
+        collected by vacuum).
 
         Version numbers are GLOBAL across branches, so a version collision
         alone no longer proves the writer's base is current: a concurrent

@@ -46,7 +46,6 @@ from pyspark.sql import types as T
 
 from geomesa_nifi_spark.lake import evolution
 from geomesa_nifi_spark.lake.ledger import (
-    CommitConflict,
     Snapshot,
     covered_buckets,
     files_covering,
@@ -63,9 +62,6 @@ MAX_LOOKUP_VALUES = 10_000
 #: ``join_strategy="auto"`` broadcasts the deduped batch only below this
 #: cached size (see :func:`_pick_join_strategy`)
 BROADCAST_THRESHOLD_BYTES = 64 * 1024 * 1024
-#: CoW merges re-executed against the new snapshot after a CommitConflict
-#: before the conflict propagates
-REDO_ATTEMPTS = 8
 
 
 @dataclass
@@ -171,7 +167,7 @@ def merge_changes(
             src = src.withColumn(f.name, F.col(f.name).cast(f.dataType))
     # Pin the bucket modulus to the snapshot this merge executes against; a
     # concurrent rescale() invalidates it, surfaces as CommitConflict, and
-    # the redo below re-buckets the batch under the new modulus.
+    # the commit's build re-buckets the batch under the new modulus.
     nb = int(base.properties["num_buckets"])
     src = src.withColumn(BUCKET_COL, table.bucket_expr(num_buckets=nb))
 
@@ -186,80 +182,86 @@ def merge_changes(
         )
 
     # The deduped source feeds two consumers (bucket discovery + the join);
-    # persist it so the upstream read/extract/dedup chain runs once.  Keep
-    # the persisted handle separate: the rescale-conflict redo rebinds
-    # ``src`` to a re-bucketed derivation, and unpersist must release the
-    # CACHED frame, not the derivation.
-    src = src_cached = src.persist()
+    # persist it so the upstream read/extract/dedup chain runs once.
+    src_cached = src.persist()
     try:
-        # ---- bucket pruning -------------------------------------------------
-        touched = sorted(
-            r[0] for r in src.select(BUCKET_COL).distinct().collect()
-        )  # <= num_buckets rows: trivially driver-safe at any scale
+        def plan(b):
+            """(modulus, source bucketed under it, touched buckets, join
+            strategy) of a merge executing against snapshot ``b``."""
+            b_nb = int(b.properties["num_buckets"])
+            s = src_cached if b_nb == nb else src_cached.withColumn(
+                BUCKET_COL, table.bucket_expr(num_buckets=b_nb)
+            )
+            touched = sorted(
+                r[0] for r in s.select(BUCKET_COL).distinct().collect()
+            )  # <= num_buckets rows: trivially driver-safe at any scale
+            if not touched:
+                return b_nb, s, touched, None
+            # sibling closure: after a lazy rescale an old-modulus file spans
+            # several current buckets; rewriting any of them must rewrite all
+            # (identity on tables without lazy debt) — this is also how lazy
+            # debt migrates: the rewrite re-labels those rows under the
+            # current modulus and retires the stamped file
+            touched = table.closure_buckets(touched, snapshot=b)
+            tgt_rows = sum(
+                f.rows
+                for f in files_covering(b.files, touched, b_nb)
+                if f.kind == "base"
+            )
+            strategy = _pick_join_strategy(
+                s, join_strategy, BROADCAST_THRESHOLD_BYTES, tgt_rows
+            )
+            return b_nb, s, touched, strategy
+
+        mod, s, touched, strategy = plan(base)
         if not touched:
             return MergeResult(snapshot=None, skipped=True, metrics={"reason": "empty_batch"})
-        # sibling closure: after a lazy rescale an old-modulus file spans
-        # several current buckets; rewriting any of them must rewrite all
-        # (identity on tables without lazy debt) — this is also how lazy
-        # debt migrates: the rewrite re-labels those rows under the current
-        # modulus and retires the stamped file
-        touched = table.closure_buckets(touched, snapshot=base)
-        tgt_rows = sum(
-            f.rows
-            for f in files_covering(base.files, touched, nb)
-            if f.kind == "base"
-        )
-        strategy = _pick_join_strategy(
-            src, join_strategy, BROADCAST_THRESHOLD_BYTES, tgt_rows
-        )
-        for attempt in range(REDO_ATTEMPTS):
-            try:
-                return _merge_prepared(
-                    table, src, touched, base, rec, final_schema, batch_id, op_col,
-                    ts_col, tiebreak, update_mode, lineage, collect_metrics,
-                    max_records_per_file, join_strategy=strategy,
-                )
-            except CommitConflict:
-                if attempt == REDO_ATTEMPTS - 1:
-                    raise
-                # a concurrent commit rewrote one of OUR buckets with NEW
-                # logical content: the join we executed is stale — redo the
-                # whole merge against the new snapshot (the persisted source
-                # makes the redo cheap; the orphaned first-attempt files are
-                # vacuum's job, exactly like any failed commit).  Jittered
-                # backoff prevents starvation against a high-frequency
-                # concurrent writer (each redo takes longer than a commit,
-                # so without backoff a busy peer can win every race).
-                import random as _random
-                import time as _time
+        prev = done = None  # last snapshot built on; its written resolution
 
-                _time.sleep(_random.uniform(0, 0.2 * (2 ** min(attempt, 4))))
-                base = table.snapshot()
-                new_nb = int(base.properties["num_buckets"])
-                if new_nb != nb:
-                    # lost the race to a rescale(): the batch's bucket labels
-                    # and the touched set are stale under the new modulus —
-                    # re-bucket (cheap: src is persisted) and re-prune.
-                    nb = new_nb
-                    src = src.withColumn(
-                        BUCKET_COL, table.bucket_expr(num_buckets=nb)
-                    )
-                    touched = table.closure_buckets(
-                        sorted(
-                            r[0]
-                            for r in src.select(BUCKET_COL).distinct().collect()
-                        ),
-                        snapshot=base,
-                    )
-                    tgt_rows = sum(
-                        f.rows
-                        for f in files_covering(base.files, touched, nb)
-                        if f.kind == "base"
-                    )
-                    strategy = _pick_join_strategy(
-                        src, join_strategy, BROADCAST_THRESHOLD_BYTES, tgt_rows
-                    )
-        raise AssertionError("unreachable")
+        def build(b):
+            nonlocal mod, s, touched, strategy, prev, done
+            if int(b.properties["num_buckets"]) != mod:
+                # lost the race to a rescale: the batch's bucket labels and
+                # the touched set are stale under the new modulus — re-bucket
+                # (cheap: the source is persisted), re-prune and redo.  A
+                # LAZY rescale keeps every file path identical, so the
+                # overlap test below alone would wrongly rebase.
+                (mod, s, touched, strategy), done = plan(b), None
+            elif (
+                done is not None
+                and _changed_buckets(prev, b, mod) & set(touched)
+                and not _conflicts_are_compaction_only(table, prev, b, touched)
+            ):
+                # a concurrent commit added NEW logical content to one of
+                # OUR buckets: the join we executed is stale — redo the
+                # merge against the new head.  Every intervening commit on
+                # our buckets being a compaction (a logical no-op fold of
+                # the very files our scan read) keeps the resolution valid:
+                # rebase instead, or a frequently-compacting concurrent MoR
+                # writer starves a CoW writer (every redo loses the next
+                # race too).  Disjoint buckets rebase without a rewrite.
+                done = None
+            prev = b
+            if done is None:
+                done = _resolve_and_write(
+                    table, s, touched, b, rec, final_schema, batch_id, op_col,
+                    ts_col, tiebreak, update_mode, lineage, collect_metrics,
+                    max_records_per_file, strategy,
+                )
+            new_files, summary, _ = done
+            # merge with the base schema at commit time so a rebase after
+            # losing to a schema-evolving commit keeps the winner's columns
+            schema = evolution.merge_schemas(
+                T.StructType.fromJson(json.loads(b.schema_json)), final_schema
+            )
+            return table.rewrite_parts(
+                b, touched, new_files, summary, schema_json=schema.json()
+            )
+
+        snap = table.optimistic_commit(build, base, batch_id=batch_id)
+        if snap is None:
+            return MergeResult(snapshot=None, skipped=True, metrics={"reason": "batch_committed"})
+        return MergeResult(snapshot=snap, metrics=done[2])
     finally:
         src_cached.unpersist()
 
@@ -289,73 +291,42 @@ def _merge_mor(
             F.sum(F.when(F.col(DELETED_COL), 1).otherwise(0)).alias("tombstoned"),
             F.sum(F.when(~F.col(DELETED_COL), 1).otherwise(0)).alias("upserted"),
         )
-    new_files = table.write_files(
-        out, base.version + 1, max_records_per_file, kind="delta"
+    # Delta files never conflict with a concurrent commit's files, so a lost
+    # race only re-bases the ledger entry on the new head — no data is
+    # rewritten (contrast CoW, where a conflicting rewrite of the same
+    # bucket must redo the merge).
+    files_for = table.appender(
+        out, int(base.properties["num_buckets"]),
+        max_records_per_file=max_records_per_file, kind="delta",
     )
-    touched = sorted({f.bucket for f in new_files})
-    if not new_files:
+    if not files_for(base):
         return MergeResult(snapshot=None, skipped=True, metrics={"reason": "empty_batch"})
 
-    def _commit(base_snap):
+    def build(b):
+        new_files = files_for(b)
         # Merge against the *current* base schema, not the pre-conflict one:
         # if we lost a race to a schema-evolving commit, republishing the
         # stale schema would silently drop the winner's added columns.
         committed = evolution.merge_schemas(
-            T.StructType.fromJson(json.loads(base_snap.schema_json)), final_schema
+            T.StructType.fromJson(json.loads(b.schema_json)), final_schema
         )
-        return table.ledger.commit(
-            Snapshot(
-                version=table.ledger.next_version(),
-                schema_json=committed.json(),
-                files=base_snap.files + new_files,
-                properties=dict(base_snap.properties),
-                summary={
-                    "operation": "merge_mor",
-                    "batch_id": str(batch_id) if batch_id is not None else None,
-                    "touched_buckets": touched,
-                    "rows_written": sum(f.rows for f in new_files),
-                    "lineage": lineage or {},
-                },
-                parent_version=base_snap.version,
-                branch=table.branch,
-            )
-        )
+        return {
+            "schema_json": committed.json(),
+            "files": b.files + new_files,
+            "properties": dict(b.properties),
+            "summary": {
+                "operation": "merge_mor",
+                "batch_id": str(batch_id) if batch_id is not None else None,
+                "touched_buckets": sorted({f.bucket for f in new_files}),
+                "rows_written": sum(f.rows for f in new_files),
+                "lineage": lineage or {},
+            },
+        }
 
-    # Optimistic concurrency: delta files never conflict with a concurrent
-    # commit's files, so losing the version race only requires re-basing the
-    # ledger entry on the new snapshot — no data is rewritten (contrast CoW,
-    # where a conflicting rewrite of the same bucket must redo the merge).
-    snap = None
-    nb = int(base.properties["num_buckets"])
-    for _attempt in range(10):
-        try:
-            snap = _commit(base)
-            break
-        except CommitConflict:
-            base = table.snapshot()
-            if batch_id is not None and str(batch_id) in table.committed_batch_ids():
-                return MergeResult(snapshot=None, skipped=True,
-                                   metrics={"reason": "batch_committed"})
-            new_nb = int(base.properties["num_buckets"])
-            if new_nb != nb:
-                # lost the race to a rescale(): the already-written delta
-                # files carry bucket labels of the OLD modulus — rebasing
-                # them would misprune every later scan.  Rewrite the batch
-                # under the new modulus (the stale files become vacuum
-                # orphans, exactly like a failed CoW attempt).
-                nb = new_nb
-                new_files = table.write_files(
-                    out.withColumn(
-                        BUCKET_COL, table.bucket_expr(num_buckets=nb)
-                    ),
-                    base.version + 1,
-                    max_records_per_file,
-                    kind="delta",
-                )
-                touched = sorted({f.bucket for f in new_files})
+    snap = table.optimistic_commit(build, base, batch_id=batch_id)
     if snap is None:
-        raise CommitConflict("merge_mor: lost the commit race 10 times")
-    metrics = {"delta_rows": sum(f.rows for f in new_files)}
+        return MergeResult(snapshot=None, skipped=True, metrics={"reason": "batch_committed"})
+    metrics = {"delta_rows": snap.summary["rows_written"]}
     if obs is not None:
         try:
             metrics.update({k: int(v or 0) for k, v in obs.get.items()})
@@ -406,27 +377,27 @@ def compact(
     bucket's key-range zone maps widen; cluster the buckets your attribute
     queries hit, keep key-sorted compaction where point lookups dominate.
 
-    Optimistic concurrency: losing the commit race to a commit that did
-    NOT touch this compaction's buckets is a pure REBASE (the already-
-    written files re-commit against the new head — no rewrite); a
-    conflicting commit that DID touch them (a new delta, a concurrent
-    compact, a rescale) forces a redo from the new head, whose stale
-    first-attempt files become vacuum orphans.  With three concurrent
-    committers (two writers + a maintenance loop) this loop is what keeps
-    auto-compaction from aborting a merge that already committed its
-    deltas (observed in ``tools/multiwriter_soak.py``).
+    Optimistic concurrency (``LakeTable.optimistic_commit``): losing the
+    commit race to a commit that did NOT touch this compaction's buckets
+    is a pure REBASE (the already-written files re-commit against the new
+    head — no rewrite); a conflicting commit that DID touch them (a new
+    delta, a concurrent compact, a rescale) forces a redo from the new
+    head, whose stale first-attempt files become vacuum orphans.  With
+    three concurrent committers (two writers + a maintenance loop) this is
+    what keeps auto-compaction from aborting a merge that already
+    committed its deltas (observed in ``tools/multiwriter_soak.py``).
     """
-    import random as _random
-    import time as _time
-
     requested = list(buckets) if buckets is not None else None
-    base = table.snapshot()
-    new_files = None
-    closure: list[int] = []
-    nb = int(base.properties["num_buckets"])
-    for attempt in range(10):
-        if new_files is None:
-            nb = int(base.properties["num_buckets"])
+    done = None  # (snapshot last built on, its modulus, closure, fold files)
+
+    def build(base):
+        nonlocal done
+        nb = int(base.properties["num_buckets"])
+        if done is not None:
+            prev, fold_nb, closure, new_files = done
+            if fold_nb != nb or _changed_buckets(prev, base, nb) & set(closure):
+                done = None  # stale fold: redo against the new head
+        if done is None:
             scope = requested
             if scope is None:
                 # default scope: buckets with deltas to fold.  A clustering
@@ -443,7 +414,7 @@ def compact(
                     }
                 )
             if not scope:
-                return base
+                return None
             # sibling closure (lazy rescale): compacting a bucket that shares
             # an old-modulus file with siblings compacts the whole group —
             # which also MIGRATES those files to the current modulus (the
@@ -472,35 +443,21 @@ def compact(
                 out, base.version + 1, max_records_per_file, kind="base",
                 sort_exprs=sort_exprs,
             )
-        try:
-            return table.commit_rewrite(
-                touched_buckets=closure,
-                new_files=new_files,
-                summary={
-                    "operation": "compact",
-                    "batch_id": None,
-                    "touched_buckets": closure,
-                    "rows_written": sum(f.rows for f in new_files),
-                    **({"clustered_by": list(cluster_by)} if cluster_by else {}),
-                },
-                base=base,
-            )
-        except CommitConflict:
-            head = table.snapshot()
-            if (
-                int(head.properties["num_buckets"]) != nb
-                or _changed_buckets(base, head, nb) & set(closure)
-            ):
-                new_files = None  # stale fold: redo against the new head
-            base = head
-            # two maintenance compactors can otherwise ping-pong the race
-            _time.sleep(_random.uniform(0, 0.2 * (2 ** min(attempt, 4))))
-    raise CommitConflict("compact: lost the commit race 10 times")
+        done = (base, nb, closure, new_files)
+        return table.rewrite_parts(base, closure, new_files, summary={
+            "operation": "compact",
+            "batch_id": None,
+            "touched_buckets": closure,
+            "rows_written": sum(f.rows for f in new_files),
+            **({"clustered_by": list(cluster_by)} if cluster_by else {}),
+        })
+
+    return table.optimistic_commit(build)
 
 
 def _changed_buckets(old: "Snapshot", new: "Snapshot", nb: int) -> set[int]:
     """Buckets whose file set differs between two snapshots — the overlap
-    test for compaction rebase (any added/removed file's coverage)."""
+    test of every rewrite's rebase (any added/removed file's coverage)."""
     old_paths = {f.path for f in old.files}
     new_paths = {f.path for f in new.files}
     changed: set[int] = set()
@@ -610,27 +567,20 @@ def _conflicts_are_compaction_only(table, base, newer, touched) -> bool:
         s = p
     prev = base
     for s in reversed(chain):
-        nb = int(s.properties["num_buckets"])
-        prev_paths = {f.path for f in prev.files}
-        cur_paths = {f.path for f in s.files}
-        changed: set[int] = set()
-        for f in s.files:
-            if f.path not in prev_paths:
-                changed.update(covered_buckets(f, nb))
-        for f in prev.files:
-            if f.path not in cur_paths:
-                changed.update(covered_buckets(f, nb))
+        changed = _changed_buckets(prev, s, int(s.properties["num_buckets"]))
         if changed & t and s.summary.get("operation") != "compact":
             return False
         prev = s
     return True
 
 
-def _merge_prepared(
+def _resolve_and_write(
     table, src, touched, base, rec, final_schema, batch_id, op_col,
     ts_col, tiebreak, update_mode, lineage, collect_metrics,
     max_records_per_file, join_strategy: str = "full_outer",
-) -> MergeResult:
+) -> tuple[list, dict, dict]:
+    """Execute the CoW resolution of ``src`` against ``base``'s touched
+    buckets and write it: ``(new files, commit summary, metrics)``."""
     key = table.key_col
     final_cols = [f.name for f in final_schema.fields]
 
@@ -713,60 +663,7 @@ def _merge_prepared(
         **metrics,
         "lineage": lineage or {},
     }
-    def files_of(snapshot, buckets):
-        nb_ = int(snapshot.properties["num_buckets"])
-        return sorted(
-            f.path for f in files_covering(snapshot.files, set(buckets), nb_)
-        )
-
-    snap = None
-    for _attempt in range(10):
-        try:
-            snap = table.commit_rewrite(
-                touched_buckets=touched,
-                new_files=new_files,
-                summary=summary,
-                base=base,
-                # merge with the base schema at commit time so a rebase after
-                # losing to a schema-evolving commit keeps the winner's columns
-                schema_json=evolution.merge_schemas(
-                    T.StructType.fromJson(json.loads(base.schema_json)), final_schema
-                ).json(),
-            )
-            break
-        except CommitConflict:
-            newer = table.snapshot()
-            if batch_id is not None and str(batch_id) in table.committed_batch_ids():
-                return MergeResult(snapshot=None, skipped=True,
-                                   metrics={"reason": "batch_committed"})
-            if int(newer.properties["num_buckets"]) != int(
-                base.properties["num_buckets"]
-            ):
-                # lost the race to a rescale.  A LAZY rescale keeps every
-                # file path identical, so the path comparison below would
-                # wrongly rebase — but our new files carry bucket labels of
-                # the OLD modulus with no stamp.  Propagate: the caller's
-                # redo loop re-buckets the batch under the new modulus.
-                raise
-            if files_of(newer, touched) != files_of(base, touched):
-                if _conflicts_are_compaction_only(table, base, newer, touched):
-                    # every intervening commit that touched OUR buckets was a
-                    # compaction — a logical no-op fold of the very files our
-                    # scan read, so the executed resolution is still valid:
-                    # rebase instead of redoing the merge.  Without this a
-                    # frequently-compacting concurrent MoR writer starves a
-                    # CoW writer (every redo loses the next race too).
-                    base = newer
-                    continue
-                # the concurrent commit added NEW logical content to one of
-                # OUR buckets: the join we executed is stale — the caller
-                # must redo the merge
-                raise
-            # disjoint buckets: rebase the commit, no data rewrite needed
-            base = newer
-    if snap is None:
-        raise CommitConflict("merge: lost the commit race 10 times")
-    return MergeResult(snapshot=snap, metrics=metrics)
+    return new_files, summary, metrics
 
 
 def append_only(
@@ -793,53 +690,33 @@ def append_only(
         ]
     )
     nb = int(base.properties["num_buckets"])
-    out = out.withColumn(BUCKET_COL, table.bucket_expr(num_buckets=nb))
-    new_files = table.write_files(out, base.version + 1, max_records_per_file)
     # A blind append is content-independent of the base snapshot, so a lost
-    # commit race is trivially rebasable: re-read the latest snapshot and
-    # re-commit the SAME already-written files on top of it (no data rewrite,
-    # no orphan part files — unlike a naive caller-level retry).
-    snap = None
-    for _attempt in range(10):
-        try:
-            snap = table.ledger.commit(
-                Snapshot(
-                    version=table.ledger.next_version(),
-                    schema_json=base.schema_json,
-                    files=base.files + new_files,
-                    properties=dict(base.properties),
-                    summary={
-                        "operation": "append",
-                        "batch_id": str(batch_id) if batch_id is not None else None,
-                        "rows_written": sum(f.rows for f in new_files),
-                        "lineage": lineage or {},
-                    },
-                    parent_version=base.version,
-                    branch=table.branch,
-                )
-            )
-            break
-        except CommitConflict:
-            base = table.snapshot()
-            if batch_id is not None and str(batch_id) in table.committed_batch_ids():
-                return MergeResult(snapshot=None, skipped=True,
-                                   metrics={"reason": "batch_committed"})
-            new_nb = int(base.properties["num_buckets"])
-            if new_nb != nb:
-                # lost the race to a rescale(): file-reusing rebase would
-                # attach old-modulus bucket labels — rewrite under the new
-                # modulus (stale files become vacuum orphans).
-                nb = new_nb
-                new_files = table.write_files(
-                    out.withColumn(
-                        BUCKET_COL, table.bucket_expr(num_buckets=nb)
-                    ),
-                    base.version + 1,
-                    max_records_per_file,
-                )
+    # commit race re-commits the SAME already-written files on top of the
+    # newer snapshot (no data rewrite, no orphan part files — unlike a naive
+    # caller-level retry).
+    files_for = table.appender(
+        out.withColumn(BUCKET_COL, table.bucket_expr(num_buckets=nb)), nb,
+        max_records_per_file=max_records_per_file,
+    )
+
+    def build(b):
+        new_files = files_for(b)
+        return {
+            "schema_json": b.schema_json,
+            "files": b.files + new_files,
+            "properties": dict(b.properties),
+            "summary": {
+                "operation": "append",
+                "batch_id": str(batch_id) if batch_id is not None else None,
+                "rows_written": sum(f.rows for f in new_files),
+                "lineage": lineage or {},
+            },
+        }
+
+    snap = table.optimistic_commit(build, base, batch_id=batch_id)
     if snap is None:
-        raise CommitConflict("append: lost the commit race 10 times")
-    return MergeResult(snapshot=snap, metrics={"appended": sum(f.rows for f in new_files)})
+        return MergeResult(snapshot=None, skipped=True, metrics={"reason": "batch_committed"})
+    return MergeResult(snapshot=snap, metrics={"appended": snap.summary["rows_written"]})
 
 
 def rewrite_fids(

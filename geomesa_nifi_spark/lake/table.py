@@ -26,8 +26,10 @@ from __future__ import annotations
 
 import json
 import os
+import random
+import time
 import uuid
-from typing import Iterable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +48,9 @@ from geomesa_nifi_spark.lake.ledger import (
 
 BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"  # hidden tombstone flag; see merge.py
+#: tries every optimistic commit (``LakeTable.optimistic_commit``) makes
+#: before a lost race propagates as CommitConflict
+COMMIT_ATTEMPTS = 10
 
 
 class PublishConflict(Exception):
@@ -277,9 +282,7 @@ class LakeTable:
         """All branch names -> head version (``main`` included)."""
         return self.ledger.branches()
 
-    def create_branch(
-        self, name: str, at: int | str | None = None, retries: int = 5
-    ) -> "LakeTable":
+    def create_branch(self, name: str, at: int | str | None = None) -> "LakeTable":
         """Fork branch ``name`` at version ``at`` (default: this handle's
         head) and return a handle bound to it.
 
@@ -292,32 +295,26 @@ class LakeTable:
         if self.ledger.head_version(name) is not None:
             raise FileExistsError(f"branch {name!r} already exists")
         src = self.snapshot(at)
-        last: Exception | None = None
-        for _ in range(retries):
-            snap = Snapshot(
-                version=self.ledger.next_version(),
-                schema_json=src.schema_json,
-                files=src.files,
-                properties=dict(src.properties),
-                summary={
+
+        def build(base: Snapshot) -> dict:
+            # the new branch has no head of its own, so the fork point stays
+            # the base — unless a concurrent create of THIS name won the race
+            if base.branch == name:
+                raise FileExistsError(f"branch {name!r} already exists")
+            return {
+                "schema_json": src.schema_json,
+                "files": src.files,
+                "properties": dict(src.properties),
+                "summary": {
                     "operation": "create_branch",
                     "branch": name,
                     "forked_from": src.version,
                 },
-                parent_version=src.version,
-                branch=name,
-            )
-            try:
-                self.ledger.commit(snap)
-                return self.for_branch(name)
-            except CommitConflict as exc:  # version race with another writer
-                if self.ledger.head_version(name) is not None:
-                    # the conflict was a concurrent create of THIS branch
-                    raise FileExistsError(
-                        f"branch {name!r} already exists"
-                    ) from exc
-                last = exc
-        raise last  # type: ignore[misc]
+            }
+
+        fork = self.for_branch(name)
+        fork.optimistic_commit(build, src)
+        return fork
 
     def _fork_version(self, name: str) -> int | None:
         """The version branch ``name`` forked from: walk the branch's own
@@ -341,7 +338,7 @@ class LakeTable:
                 return p
             s = ps
 
-    def publish_branch(self, name: str, retries: int = 5) -> Snapshot:
+    def publish_branch(self, name: str) -> Snapshot:
         """Atomically fast-forward THIS branch (normally main) to branch
         ``name``'s head — the Publish step of Write-Audit-Publish.
 
@@ -432,21 +429,19 @@ class LakeTable:
                 break
         staged_ids.reverse()
         published_commits.reverse()
-        last: Exception | None = None
-        for _ in range(retries):
-            cur = self.snapshot()
-            if cur.version != fork:
+
+        def build(base: Snapshot) -> dict:
+            if base.version != fork:
                 raise PublishConflict(
                     f"branch {name!r} forked from v{fork} but {self.branch!r} "
-                    f"is now at v{cur.version}; re-fork and re-audit, or "
+                    f"is now at v{base.version}; re-fork and re-audit, or "
                     f"replay the staged batches onto the current head"
                 )
-            snap = Snapshot(
-                version=self.ledger.next_version(),
-                schema_json=bsnap.schema_json,
-                files=bsnap.files,
-                properties=dict(bsnap.properties),
-                summary={
+            return {
+                "schema_json": bsnap.schema_json,
+                "files": bsnap.files,
+                "properties": dict(bsnap.properties),
+                "summary": {
                     "operation": "publish",
                     "published_branch": name,
                     "published_version": bhead,
@@ -454,14 +449,9 @@ class LakeTable:
                     "published_batch_ids": staged_ids,
                     "published_commits": published_commits,
                 },
-                parent_version=cur.version,
-                branch=self.branch,
-            )
-            try:
-                return self.ledger.commit(snap)
-            except CommitConflict as exc:  # re-read: maybe another branch's
-                last = exc                 # writer just took the version
-        raise last  # type: ignore[misc]
+            }
+
+        return self.optimistic_commit(build)
 
     def drop_branch(self, name: str) -> list[int]:
         """Delete branch ``name``'s snapshots from the ledger (abandoned
@@ -513,7 +503,6 @@ class LakeTable:
         batch_id: str,
         reason: str | None = None,
         staged_version: int | None = None,
-        retries: int = 5,
     ) -> Snapshot:
         """Commit a NO-OP snapshot recording that ``batch_id`` was staged,
         failed its Write-Audit-Publish audit, and was rejected — the lake
@@ -522,34 +511,24 @@ class LakeTable:
         batch id, so a crash/restart RE-DELIVERY of the rejected batch is
         skipped by the ordinary exactly-once check instead of being
         re-staged and re-failed forever."""
-        last: Exception | None = None
-        for _ in range(retries):
-            base = self.snapshot()
-            snap = Snapshot(
-                version=self.ledger.next_version(),
-                schema_json=base.schema_json,
-                files=base.files,
-                properties=dict(base.properties),
-                summary={
-                    "operation": "audit_reject",
-                    "batch_id": str(batch_id),
-                    "reason": reason,
-                    "staged_version": staged_version,
-                },
-                parent_version=base.version,
-                branch=self.branch,
-            )
-            try:
-                return self.ledger.commit(snap)
-            except CommitConflict as exc:
-                last = exc
-        raise last  # type: ignore[misc]
+        return self.optimistic_commit(lambda base: {
+            "schema_json": base.schema_json,
+            "files": base.files,
+            "properties": dict(base.properties),
+            "summary": {
+                "operation": "audit_reject",
+                "batch_id": str(batch_id),
+                "reason": reason,
+                "staged_version": staged_version,
+            },
+        })
 
-    def rollback(self, version: int | str, retries: int = 5) -> Snapshot:
+    def rollback(self, version: int | str) -> Snapshot:
         """Restore the table's visible state to ``version`` (or tag name)
         as a NEW commit — history is never rewritten, so concurrent readers
         keep their snapshot isolation and the audit chain stays intact
-        (Iceberg-rollback semantics).
+        (Iceberg-rollback semantics).  A no-op when the head already is
+        ``version``.
 
         The new snapshot takes the target's files, schema AND properties
         (a rollback across a ``rescale`` must restore the old bucket
@@ -559,29 +538,22 @@ class LakeTable:
         under a new batch_id, which is what a corrected upstream batch is.
         """
         target = self.snapshot(version)
-        last: Exception | None = None
-        for _ in range(retries):
-            cur = self.snapshot()
-            if cur.version == target.version:
-                return cur
-            snap = Snapshot(
-                version=self.ledger.next_version(),
-                schema_json=target.schema_json,
-                files=target.files,
-                properties=dict(target.properties),
-                summary={
+
+        def build(base: Snapshot) -> dict | None:
+            if base.version == target.version:
+                return None
+            return {
+                "schema_json": target.schema_json,
+                "files": target.files,
+                "properties": dict(target.properties),
+                "summary": {
                     "operation": "rollback",
                     "rollback_of": target.version,
-                    "previous_head": cur.version,
+                    "previous_head": base.version,
                 },
-                parent_version=cur.version,
-                branch=self.branch,
-            )
-            try:
-                return self.ledger.commit(snap)
-            except CommitConflict as exc:  # another writer took the version
-                last = exc
-        raise last  # type: ignore[misc]
+            }
+
+        return self.optimistic_commit(build)
 
     def committed_batch_ids(self) -> set[str]:
         return self.ledger.committed_batch_ids()
@@ -1000,16 +972,93 @@ class LakeTable:
         }
         return footers
 
-    def commit_rewrite(
+    def optimistic_commit(
         self,
+        build: Callable[[Snapshot], dict | None],
+        base: Snapshot | None = None,
+        batch_id: str | None = None,
+    ) -> Snapshot | None:
+        """Publish ``build(base)`` as this branch's next snapshot — the one
+        optimistic-concurrency loop every writer commits through.
+
+        ``build`` returns the next snapshot's ``files``, ``schema_json``,
+        ``properties`` and ``summary`` as a dict, or ``None`` when there is
+        nothing to commit (then ``base`` itself is returned); this method
+        sets the version, ``parent_version`` and branch.  The first attempt
+        builds on ``base`` (default: the branch head).  When another writer
+        wins the race (:class:`CommitConflict`) the loop backs off with
+        jitter, re-reads the branch head and calls ``build(head)`` again,
+        up to ``COMMIT_ATTEMPTS`` times; ``build`` decides whether the
+        head invalidates its work (redo) or only needs re-referencing
+        (rebase), and raises to refuse.  The loser's orphaned files are
+        vacuum's job.  With a ``batch_id``, a conflict whose winner turns
+        out to have committed that very batch returns ``None``: the batch
+        is in, exactly once."""
+        if base is None:
+            base = self.snapshot()
+        for attempt in range(1, COMMIT_ATTEMPTS + 1):
+            parts = build(base)
+            if parts is None:
+                return base
+            try:
+                return self._publish(base, parts)
+            except CommitConflict:
+                if attempt == COMMIT_ATTEMPTS:
+                    raise
+            # jittered exponential backoff: a redo takes longer than a
+            # commit, so without it a busy peer can win every race
+            time.sleep(random.uniform(0, 0.2 * 2 ** min(attempt - 1, 4)))
+            head = self.ledger.head_version(self.branch)
+            if head is not None:  # a branch being created has no head yet
+                base = self.ledger.snapshot(head)
+            if batch_id is not None and str(batch_id) in self.committed_batch_ids():
+                return None
+        raise AssertionError("unreachable")
+
+    def _publish(self, base: Snapshot, parts: dict) -> Snapshot:
+        return self.ledger.commit(
+            Snapshot(
+                version=self.ledger.next_version(),
+                parent_version=base.version,
+                branch=self.branch,
+                **parts,
+            )
+        )
+
+    def appender(
+        self, df: DataFrame, num_buckets: int, **write_kw
+    ) -> Callable[[Snapshot], list[DataFile]]:
+        """``files_for(base)`` of an append-shaped commit (blind append,
+        merge-on-read delta, bootstrap): ``df``'s rows — labeled
+        ``_bucket`` under ``num_buckets`` — as new data files labeled under
+        ``base``'s modulus.  Appended files never conflict with another
+        commit's files, so every rebase re-commits the SAME files on top of
+        the new head; only a lost race to a ``rescale`` (a changed modulus)
+        rewrites them, since their labels would misprune every later scan.
+        The stale files become vacuum orphans."""
+        written: dict[int, list[DataFile]] = {}
+
+        def files_for(base: Snapshot) -> list[DataFile]:
+            nb = int(base.properties["num_buckets"])
+            if nb not in written:
+                out = df if nb == num_buckets else df.withColumn(
+                    BUCKET_COL, self.bucket_expr(num_buckets=nb)
+                )
+                written[nb] = self.write_files(out, base.version + 1, **write_kw)
+            return written[nb]
+
+        return files_for
+
+    def rewrite_parts(
+        self,
+        base: Snapshot,
         touched_buckets: Iterable[int],
         new_files: list[DataFile],
         summary: dict,
-        base: Snapshot,
         schema_json: str | None = None,
-        properties: dict[str, str] | None = None,
-    ) -> Snapshot:
-        """Publish a snapshot replacing the touched buckets' files.
+    ) -> dict:
+        """The snapshot parts replacing the touched buckets' files of
+        ``base`` with ``new_files`` — a rewrite commit's ``build`` result.
 
         Untouched buckets keep their existing files untouched — the
         copy-on-write unit is the bucket, not the table.  Mixed-modulus
@@ -1034,16 +1083,12 @@ class LakeTable:
                     )
             else:
                 kept.append(f)
-        snap = Snapshot(
-            version=self.ledger.next_version(),
-            schema_json=schema_json or base.schema_json,
-            files=kept + list(new_files),
-            properties=properties or dict(base.properties),
-            summary=summary,
-            parent_version=base.version,
-            branch=self.branch,
-        )
-        return self.ledger.commit(snap)
+        return {
+            "schema_json": schema_json or base.schema_json,
+            "files": kept + list(new_files),
+            "properties": dict(base.properties),
+            "summary": summary,
+        }
 
     def evolve_schema(self, new_schema: T.StructType, summary: dict | None = None) -> Snapshot:
         """Additive evolution: new snapshot, same data files, wider schema.
@@ -1053,22 +1098,17 @@ class LakeTable:
         (``DataStoreIngestProcessor.scala:245-252``).
         """
         base = self.snapshot()
-        snap = Snapshot(
-            version=self.ledger.next_version(),
-            schema_json=new_schema.json(),
-            files=base.files,
-            properties=dict(base.properties),
-            summary={"operation": "evolve_schema", **(summary or {})},
-            parent_version=base.version,
-            branch=self.branch,
-        )
-        return self.ledger.commit(snap)
+        return self._publish(base, {
+            "schema_json": new_schema.json(),
+            "files": base.files,
+            "properties": dict(base.properties),
+            "summary": {"operation": "evolve_schema", **(summary or {})},
+        })
 
     def rescale(
         self,
         new_num_buckets: int,
         max_records_per_file: int = 2_000_000,
-        retries: int = 5,
         lazy: bool = False,
     ) -> Snapshot:
         """Change the table's bucket count — the admin rebalance operation.
@@ -1091,12 +1131,12 @@ class LakeTable:
         retain their own ``num_buckets`` property and ``lookup``/readers
         prune with the modulus of the version they read.
 
-        Concurrency: optimistic like every commit — a concurrent writer
-        winning the version race invalidates the rewrite, which redoes
-        against the new state (bounded ``retries``; orphaned files are
-        vacuum's job).  Concurrent merges that lose against a rescale
-        re-derive the modulus fresh (``num_buckets`` is never cached) and
-        re-bucket their batch before retrying.
+        Concurrency: optimistic like every commit (``optimistic_commit``) —
+        a concurrent writer winning the version race invalidates the
+        rewrite, which redoes against the new head (the lazy form just
+        re-stamps the new head's files).  Concurrent merges that lose
+        against a rescale re-derive the modulus fresh (``num_buckets`` is
+        never cached) and re-bucket their batch before retrying.
 
         ``lazy=True`` — incremental rescale, Iceberg partition-spec
         evolution aligned to hash buckets: a METADATA-ONLY commit that
@@ -1116,14 +1156,20 @@ class LakeTable:
         """
         if new_num_buckets <= 0:
             raise ValueError(f"num_buckets must be positive, got {new_num_buckets}")
-        if lazy:
-            from dataclasses import replace as _replace
+        from dataclasses import replace as _replace
 
-            for _attempt in range(retries):
-                base = self.snapshot()
-                old = int(base.properties["num_buckets"])
-                if old == new_num_buckets:
-                    return base  # idempotent no-op
+        def build(base: Snapshot) -> dict | None:
+            old = int(base.properties["num_buckets"])
+            if old == new_num_buckets:
+                return None  # idempotent no-op
+            props = dict(base.properties)
+            props["num_buckets"] = str(new_num_buckets)
+            summary = {
+                "operation": "rescale_lazy" if lazy else "rescale",
+                "from_buckets": old,
+                "to_buckets": new_num_buckets,
+            }
+            if lazy:
                 if new_num_buckets % old != 0 or new_num_buckets < old:
                     raise ValueError(
                         f"lazy rescale requires growing to an integer multiple "
@@ -1134,67 +1180,29 @@ class LakeTable:
                 # files stamped by an EARLIER lazy rescale keep their stamp
                 # (their labels are still under that older modulus, which
                 # divides `old` and therefore the new modulus too)
-                stamped = [
+                files = [
                     f if f.modulus is not None else _replace(f, modulus=old)
                     for f in base.files
                 ]
-                props = dict(base.properties)
-                props["num_buckets"] = str(new_num_buckets)
-                snap = Snapshot(
-                    version=self.ledger.next_version(),
-                    schema_json=base.schema_json,
-                    files=stamped,
-                    properties=props,
-                    summary={
-                        "operation": "rescale_lazy",
-                        "from_buckets": old,
-                        "to_buckets": new_num_buckets,
-                        "stamped_files": sum(
-                            1 for f in stamped if f.modulus is not None
-                        ),
-                    },
-                    parent_version=base.version,
-                    branch=self.branch,
+                summary["stamped_files"] = sum(
+                    1 for f in files if f.modulus is not None
                 )
-                try:
-                    return self.ledger.commit(snap)
-                except CommitConflict:
-                    continue  # metadata-only: just re-read and re-stamp
-            raise CommitConflict(
-                f"rescale(lazy): lost the commit race {retries} times"
-            )
-        for _attempt in range(retries):
-            base = self.snapshot()
-            old = int(base.properties["num_buckets"])
-            if old == new_num_buckets:
-                return base  # idempotent no-op
-            df = self.scan(snapshot=base, include_tombstones=True).withColumn(
-                BUCKET_COL, self.bucket_expr(num_buckets=new_num_buckets)
-            )
-            new_files = self.write_files(
-                df, base.version + 1, max_records_per_file, kind="base"
-            )
-            props = dict(base.properties)
-            props["num_buckets"] = str(new_num_buckets)
-            snap = Snapshot(
-                version=self.ledger.next_version(),
-                schema_json=base.schema_json,
-                files=new_files,
-                properties=props,
-                summary={
-                    "operation": "rescale",
-                    "from_buckets": old,
-                    "to_buckets": new_num_buckets,
-                    "rows_written": sum(f.rows for f in new_files),
-                },
-                parent_version=base.version,
-                branch=self.branch,
-            )
-            try:
-                return self.ledger.commit(snap)
-            except CommitConflict:
-                continue  # table moved under us: redo against the new state
-        raise CommitConflict(f"rescale: lost the commit race {retries} times")
+            else:
+                df = self.scan(snapshot=base, include_tombstones=True).withColumn(
+                    BUCKET_COL, self.bucket_expr(num_buckets=new_num_buckets)
+                )
+                files = self.write_files(
+                    df, base.version + 1, max_records_per_file, kind="base"
+                )
+                summary["rows_written"] = sum(f.rows for f in files)
+            return {
+                "schema_json": base.schema_json,
+                "files": files,
+                "properties": props,
+                "summary": summary,
+            }
+
+        return self.optimistic_commit(build)
 
     def expire_snapshots(
         self, keep_last: int = 20, older_than_ms: int | None = None

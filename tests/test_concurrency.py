@@ -1,5 +1,8 @@
 """Optimistic-concurrency behavior: MoR commits rebase past concurrent
-commits; CoW commits rebase only when buckets are disjoint."""
+commits; CoW commits rebase only when buckets are disjoint; every writer,
+the metadata-only ones included, commits through one loop
+(``LakeTable.optimistic_commit``) that skips a batch a racing writer
+already committed."""
 
 from __future__ import annotations
 
@@ -9,7 +12,14 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
-from geomesa_nifi_spark.lake import CommitConflict, LakeTable, merge_changes
+from geomesa_nifi_spark.lake import (
+    CommitConflict,
+    LakeTable,
+    append_only,
+    bootstrap_load,
+    merge_changes,
+)
+from geomesa_nifi_spark.lake.ledger import Ledger
 from geomesa_nifi_spark.lake.table import LakeTable as _LT
 
 SCHEMA = T.StructType(
@@ -160,8 +170,6 @@ def test_append_only_rebases_past_concurrent_commit(spark, tmp_path, monkeypatch
     """A blind append is content-independent of the base snapshot: losing
     the commit race must rebase onto the newer snapshot, reusing the
     already-written files (no redo, no orphan parts), not raise."""
-    from geomesa_nifi_spark.lake import append_only
-
     t = make(spark, tmp_path)
     _inject_commit_between(monkeypatch, t, spark, [ev("other", 99, "x")])
     r = append_only(t, spark.createDataFrame([ev("mine", 1, "v")], CHANGE).drop("op"),
@@ -175,11 +183,22 @@ def test_append_only_rebases_past_concurrent_commit(spark, tmp_path, monkeypatch
     assert [p for p in t.vacuum(min_age_s=0) if p.endswith(".parquet")] == []
 
 
-def test_append_only_conflict_idempotent_skip(spark, tmp_path, monkeypatch):
-    """If the conflicting commit turns out to BE our batch (a concurrent
-    duplicate replay), the retry loop skips instead of double-appending."""
-    from geomesa_nifi_spark.lake import append_only
+#: every data writer that records a batch id: (table, change rows, batch id)
+#: -> MergeResult
+WRITERS = {
+    "append_only": lambda t, df, bid: append_only(t, df.drop("op"), batch_id=bid),
+    "merge_mor": lambda t, df, bid: merge_changes(
+        t, df, batch_id=bid, mode="mor", auto_compact=False),
+    "merge_cow": lambda t, df, bid: merge_changes(t, df, batch_id=bid, mode="cow"),
+    "bootstrap_load": lambda t, df, bid: bootstrap_load(t, df.drop("op"), batch_id=bid),
+}
 
+
+@pytest.mark.parametrize("writer", list(WRITERS))
+def test_conflict_idempotent_skip(spark, tmp_path, monkeypatch, writer):
+    """If the conflicting commit turns out to BE our batch (a concurrent
+    duplicate replay), the commit loop skips instead of applying it twice."""
+    write = WRITERS[writer]
     t = make(spark, tmp_path)
     other = LakeTable(spark, t.root)
     orig = _LT.write_files
@@ -189,16 +208,16 @@ def test_append_only_conflict_idempotent_skip(spark, tmp_path, monkeypatch):
         files = orig(self, df, version_hint, max_records_per_file, kind, **kw)
         if not state["fired"]:
             state["fired"] = True
-            append_only(other,
-                        spark.createDataFrame([ev("dup", 1, "v")], CHANGE).drop("op"),
-                        batch_id="me")
+            write(other, spark.createDataFrame([ev("dup", 1, "v")], CHANGE), "me")
         return files
 
     monkeypatch.setattr(_LT, "write_files", patched)
-    r = append_only(t, spark.createDataFrame([ev("dup", 1, "v")], CHANGE).drop("op"),
-                    batch_id="me")
+    r = write(t, spark.createDataFrame([ev("dup", 1, "v")], CHANGE), "me")
+    assert state["fired"]
     assert r.skipped and r.metrics.get("reason") == "batch_committed"
-    assert [x.url for x in t.scan().collect()] == ["dup"]  # appended exactly once
+    bids = [s.summary.get("batch_id") for s in t.history()]
+    assert bids.count("me") == 1
+    assert [x.url for x in t.scan().collect()] == ["dup"]  # applied exactly once
 
 
 def _count_base_writes(monkeypatch):
@@ -267,3 +286,96 @@ def test_compact_redo_on_overlapping_conflict(spark, tmp_path, monkeypatch):
     assert not any(f.kind == "delta" for f in t.snapshot().files)
     # the abandoned first-attempt files are unreferenced -> vacuum removes them
     assert t.vacuum(min_age_s=0)
+
+
+#: every metadata-only commit: name -> (the summary operation it commits,
+#: the call on a table that has a "side" branch)
+METADATA_OPS = {
+    "create_branch": ("create_branch", lambda t: t.create_branch("audit")),
+    "publish_branch": ("publish", lambda t: t.publish_branch("audit")),
+    "record_audit_reject": (
+        "audit_reject", lambda t: t.record_audit_reject("rejected", reason="x")),
+    "rollback": ("rollback", lambda t: t.rollback(0)),
+    "rescale_lazy": ("rescale_lazy", lambda t: t.rescale(8, lazy=True)),
+    "rescale": ("rescale", lambda t: t.rescale(8)),
+}
+
+
+def _steal_first_commit(monkeypatch, intrude):
+    """Wrap Ledger.commit: on its first call, ``intrude()`` commits first
+    and claims the version number the caller is about to publish."""
+    real = Ledger.commit
+    state = {"fired": False}
+
+    def commit(self, snapshot):
+        if not state["fired"]:
+            state["fired"] = True
+            intrude()
+        return real(self, snapshot)
+
+    monkeypatch.setattr(Ledger, "commit", commit)
+    return state
+
+
+@pytest.mark.parametrize("op", list(METADATA_OPS))
+def test_metadata_commit_survives_lost_race(spark, tmp_path, monkeypatch, op):
+    """Each metadata-only commit loses the version race to a commit on
+    ANOTHER branch: it must land exactly once, on its own branch's head."""
+    t = make(spark, tmp_path)
+    side = t.create_branch("side")
+    if op == "publish_branch":
+        t.create_branch("audit").record_audit_reject("staged")
+    if op == "rollback":
+        t.record_audit_reject("later")
+    target = "audit" if op == "create_branch" else "main"
+    head = t.snapshot().version  # create_branch forks at main's head
+    operation, call = METADATA_OPS[op]
+    state = _steal_first_commit(monkeypatch, lambda: side.record_audit_reject("intruder"))
+    call(t)
+    assert state["fired"]
+    landed = [s for s in t.history(all_branches=True)
+              if s.summary.get("operation") == operation and s.branch == target]
+    assert len(landed) == 1
+    assert landed[0].parent_version == head
+    assert "intruder" in {s.summary.get("batch_id") for s in side.history()}
+    assert LakeTable(spark, t.root, branch=target).snapshot().version == landed[0].version
+
+
+def test_create_branch_lost_to_same_name_raises(spark, tmp_path, monkeypatch):
+    """A concurrent create of the SAME branch name wins: ours must raise
+    FileExistsError, not fork a second time."""
+    t = make(spark, tmp_path)
+    other = LakeTable(spark, t.root)
+    _steal_first_commit(monkeypatch, lambda: other.create_branch("audit"))
+    with pytest.raises(FileExistsError):
+        t.create_branch("audit")
+    forks = [s for s in t.history(all_branches=True)
+             if s.summary.get("operation") == "create_branch"
+             and s.summary.get("branch") == "audit"]
+    assert len(forks) == 1
+
+
+def test_one_commit_loop():
+    """Every writer commits through LakeTable.optimistic_commit: it holds
+    the package's only CommitConflict handler, and no LakeTable method
+    takes a retry bound of its own (COMMIT_ATTEMPTS bounds them all)."""
+    import inspect
+    import pathlib
+
+    import geomesa_nifi_spark
+
+    pkg = pathlib.Path(geomesa_nifi_spark.__file__).parent
+    handlers = [
+        f"{path.relative_to(pkg).as_posix()}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "except CommitConflict" in line
+    ]
+    assert len(handlers) == 1, handlers
+    assert handlers[0].startswith("lake/table.py:")
+    assert "except CommitConflict" in inspect.getsource(_LT.optimistic_commit)
+    with_retries = [
+        name for name, fn in inspect.getmembers(_LT, inspect.isfunction)
+        if "retries" in inspect.signature(fn).parameters
+    ]
+    assert not with_retries, with_retries

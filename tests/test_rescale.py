@@ -500,7 +500,7 @@ def test_commit_rewrite_rejects_unclosed_touched_set(spark, tmp_path):
     t.rescale(16, lazy=True)
     base = t.snapshot()
     with pytest.raises(ValueError, match="sibling-close"):
-        t.commit_rewrite(
+        t.rewrite_parts(
             touched_buckets=[5], new_files=[], summary={"operation": "test"},
             base=base,
         )
