@@ -231,7 +231,16 @@ class CommitConflict(Exception):
 
 
 class Ledger:
-    """Append-only snapshot log under ``<table_root>/_ledger``."""
+    """Append-only snapshot log under ``<table_root>/_ledger``.
+
+    One handle per thread: the read caches below are not thread-safe.  For
+    example, ``_scan_branch_heads`` prunes every cached head missing from
+    its own directory listing, so a thread whose listing predates another
+    thread's commit can delete the live ``main`` head that commit just
+    cached, and ``snapshot()`` then raises ``KeyError`` until the next
+    commit.  Threads that share a table open their own ``LakeTable`` on
+    its root (as ``run_file_replay``'s view refresher does); handles in
+    any number of threads and processes coordinate through the files."""
 
     def __init__(self, table_root: str):
         self.table_root = table_root
@@ -310,7 +319,12 @@ class Ledger:
         live = self._versions()
         for v in live:
             if v > self._branch_seen_version:
-                b = self.snapshot(v).branch
+                try:
+                    b = self.snapshot(v).branch
+                except FileNotFoundError:
+                    # dropped (or expired) by another handle since the
+                    # listing: a dead version is no branch's head
+                    continue
                 if self._branch_heads.get(b, -1) < v:
                     self._branch_heads[b] = v
                 self._branch_seen_version = v

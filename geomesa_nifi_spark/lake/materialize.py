@@ -44,6 +44,12 @@ accumulate incrementally and may drift from a fresh recompute by
 floating-point reassociation — use integral metrics where bit-exact
 parity matters, or ``rebuild()`` periodically.
 
+Because a refresh covers a version range, it need not follow every
+source commit: ``run_file_replay(refresh_views=...)`` refreshes its views
+on one background thread beside the ingest, folding the commits that
+land during a refresh into the next one's range, and drains them to the
+source head before it returns.
+
 Retention contract (mirrors ``streaming/changes.py``): a refresh whose
 range reaches past snapshots expired by ``expire_snapshots`` raises
 :class:`MaterializeRetentionError` — never a silently-wrong view;
@@ -411,8 +417,8 @@ def refresh(
         for name in extremal:
             c = ~F.col(f"_pre_{name}").eqNullSafe(F.col(f"_post_{name}"))
             nonzero = c if nonzero is None else (nonzero | c)
-        # the delta feeds three consumers (emptiness probe, bucket collect,
-        # the merge source) — materialize it once; it is aggregate-sized
+        # the delta feeds two consumers (the bucket collect below and the
+        # merge source) — materialize it once; it is aggregate-sized
         # (≤ #touched groups), never batch-sized
         delta = (
             delta.filter(nonzero)
@@ -421,7 +427,16 @@ def refresh(
         )
 
     batch_id = f"mv:{from_v}->{to_v}"
-    if delta is None or len(delta.take(1)) == 0:
+    # the view buckets the delta touches (collect ≤ num_buckets ints,
+    # driver-safe): one job both prunes the view read below and probes for
+    # an empty delta (no buckets)
+    vbuckets = [] if delta is None else sorted(
+        r["_b"]
+        for r in delta.select(view.bucket_expr(key=F.col(MV_KEY)).alias("_b"))
+        .distinct()
+        .collect()
+    )
+    if not vbuckets:
         if delta is not None:
             delta.unpersist()
         src = view.spark.createDataFrame([], view.schema())
@@ -435,12 +450,8 @@ def refresh(
         )
 
     # current view rows for the touched groups: bucket-pruned by the
-    # delta's own keys (collect ≤ num_buckets ints, driver-safe)
+    # delta's own keys
     additive, extremal = _split_metrics(metrics)
-    dk = delta.select(
-        view.bucket_expr(key=F.col(MV_KEY)).alias("_b")
-    ).distinct()
-    vbuckets = sorted(r["_b"] for r in dk.collect())
     cur = view.scan(buckets=vbuckets).select(
         MV_KEY, *[F.col(n).alias(f"_old_{n}") for n in metrics]
     )

@@ -26,12 +26,15 @@ reference implements with flush-on-switch (:312).
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geomesa_nifi_spark.functions.extract import extract_pages
+from geomesa_nifi_spark.lake import materialize
 from geomesa_nifi_spark.lake.evolution import CompatibilityMode
 from geomesa_nifi_spark.lake.merge import MergeResult, append_only, merge_changes
 from geomesa_nifi_spark.lake.table import LakeTable
@@ -44,6 +47,64 @@ class ReplayStats:
     skipped: int = 0
     rows: int = 0
     results: list[dict] = field(default_factory=list)
+
+
+class _ViewRefresher:
+    """One background thread that keeps ``views`` at the source head.
+
+    Micro-batches only :meth:`signal` that the source moved; the thread
+    refreshes every view to the head, and signals that arrive during a
+    refresh fold into the next one, so one refresh covers several commits
+    (refresh is range-based and exactly-once).  The thread reads the
+    source through its own handle: ledger caches are per handle and not
+    thread-safe (see ``Ledger``).  The first refresh error stops the
+    thread; it is re-raised at the next :meth:`signal` and returned by
+    :meth:`drain`."""
+
+    THREAD_NAME = "gns-view-refresher"
+
+    def __init__(self, spark: SparkSession, table: LakeTable, views: list[LakeTable]):
+        self._source = LakeTable(spark, table.root, table.branch)
+        self._views = views
+        self._cond = threading.Condition()
+        self._dirty = False
+        self._draining = False
+        self._error: Exception | None = None
+        self._thread = InheritableThread(self._run, name=self.THREAD_NAME, daemon=True)
+        self._thread.start()
+
+    def _run(self) -> None:
+        while True:
+            with self._cond:
+                self._cond.wait_for(lambda: self._dirty or self._draining)
+                self._dirty = False
+                last = self._draining
+            try:
+                for view in self._views:
+                    materialize.refresh(view, self._source)
+            except Exception as exc:
+                with self._cond:
+                    self._error = exc
+                return
+            if last:
+                return
+
+    def signal(self) -> None:
+        """Mark the source as moved; raises a failed refresh's error."""
+        with self._cond:
+            if self._error is not None:
+                raise self._error
+            self._dirty = True
+            self._cond.notify()
+
+    def drain(self) -> Exception | None:
+        """Refresh once more to the source head, stop the thread, and
+        return the refresh error (if any)."""
+        with self._cond:
+            self._draining = True
+            self._cond.notify()
+        self._thread.join()
+        return self._error
 
 
 def _wap_cycle(
@@ -133,10 +194,16 @@ def run_file_replay(
     extracted columns.
 
     ``refresh_views``: incremental materialized views (``lake/materialize``)
-    advanced to the table head after every micro-batch.  Refresh is
-    range-based and exactly-once, so a crash between the table commit and
-    the view refresh self-heals: the next batch's refresh simply covers
-    both versions.
+    advanced in the background, off the micro-batch path: each batch only
+    signals one refresher thread, which refreshes every view to the table
+    head and folds the signals that arrive meanwhile into one range.
+    While the stream runs, a view lags the table by at most one refresh;
+    whenever this call returns (drained input, injected crash or failure)
+    the views are at the head, even if no new input was found.  A refresh
+    error fails the stream at its next batch and is raised on return (a
+    stream failure wins and chains it).  Refresh is range-based and
+    exactly-once, so a crash between the table commit and the view
+    refresh self-heals: the next refresh simply covers both versions.
 
     ``wap=True`` turns every micro-batch into a Write-Audit-Publish cycle
     (the NiFi staging-store + routing flow, as lake branches): the batch is
@@ -278,10 +345,8 @@ def run_file_replay(
                     table, branch_name, batch_id, write_into, wap_audit,
                     wap_keep_branches,
                 )
-        for view in refresh_views or []:
-            from geomesa_nifi_spark.lake.materialize import refresh
-
-            refresh(view, table)
+        if refresher is not None:
+            refresher.signal()
         rows = sum(r["rows"] for r in offset_ranges) if offset_ranges else 0
         stats.batches += 1
         stats.skipped += 1 if result.skipped else 0
@@ -290,18 +355,29 @@ def run_file_replay(
             metrics.batch_end(batch_id, rows, {"skipped": result.skipped, **result.metrics})
         )
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    refresher = _ViewRefresher(spark, table, refresh_views) if refresh_views else None
+    failure: Exception | None = None
     try:
-        query.awaitTermination()
+        query = (
+            stream.writeStream.foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            query.awaitTermination()
+        finally:
+            if query.isActive:
+                query.stop()
     except Exception as exc:  # surface only real failures, not the injected one
         if "_InjectedFailure" not in str(type(exc)) and "injected crash" not in str(exc):
-            raise
+            failure = exc
     finally:
-        if query.isActive:
-            query.stop()
+        view_error = refresher.drain() if refresher is not None else None
+    if failure is not None:
+        if view_error is not None:
+            raise failure from view_error
+        raise failure
+    if view_error is not None:
+        raise view_error
     return stats

@@ -138,6 +138,21 @@ def test_drop_branch(spark):
             assert os.path.exists(os.path.join(t.root, f.path))
 
 
+def test_head_scan_skips_a_version_dropped_after_listing(spark, monkeypatch):
+    """Another handle (thread or process) may drop a branch between this
+    handle's directory listing and its read of a listed snapshot: the
+    head scan skips the vanished version instead of failing."""
+    with tempfile.TemporaryDirectory() as tmp:
+        t = _mk(spark, tmp)
+        t.create_branch("wap-1")
+        reader = LakeTable(spark, t.root)
+        stale = reader.ledger._versions()
+        t.drop_branch("wap-1")
+        monkeypatch.setattr(reader.ledger, "_versions", lambda: stale)
+        assert reader.ledger.head_version("main") == t.snapshot().version
+        assert reader.ledger.head_version("wap-1") is None
+
+
 def test_exactly_once_survives_publish_then_drop(spark):
     """Staged batch ids must stay committed after the branch that staged
     them is deleted — they ride the publish commit's published_batch_ids,

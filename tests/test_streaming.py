@@ -3,16 +3,26 @@ batch-size control, lineage records."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geomesa_nifi_spark.functions.extract import extract_pages
-from geomesa_nifi_spark.lake import LakeTable
+from geomesa_nifi_spark.lake import (
+    LakeTable,
+    create_aggregate_view,
+    last_refreshed_version,
+    materialize,
+)
 from geomesa_nifi_spark.operators.dedup import lww_dedup
 from geomesa_nifi_spark.sources.changegen import change_stream, write_replay_files
 from geomesa_nifi_spark.streaming.lineage import lineage_records
-from geomesa_nifi_spark.streaming.pipeline import run_file_replay
+from geomesa_nifi_spark.streaming.pipeline import _ViewRefresher, run_file_replay
 
 PAGES = T.StructType(
     [
@@ -354,3 +364,171 @@ def test_streaming_view_refresh_with_crash_resume(spark, tmp_path, replay_dir):
         for r in t.scan().groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert got == want and sum(got.values()) == expected_final_count(spark, replay_dir)
+
+
+# -- background view refresh ------------------------------------------------
+
+REFRESHER = "gns-view-refresher"
+
+
+def _view(spark, tmp_path, t):
+    return create_aggregate_view(
+        spark, str(tmp_path / "mv"), t,
+        group_cols=["lang"], metrics={"n": "count"}, num_buckets=4,
+    )
+
+
+def _assert_view_at_head(view, t):
+    assert last_refreshed_version(view) == t.snapshot().version
+    got = {r["lang"]: r["n"] for r in view.scan().select("lang", "n").collect()}
+    want = {
+        r["lang"]: r["n"]
+        for r in t.scan().groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert got == want
+
+
+def _assert_no_refresher():
+    assert REFRESHER not in {th.name for th in threading.enumerate()}
+
+
+def test_replay_without_new_input_drains_views(spark, tmp_path, replay_dir):
+    """A call that finds no new input still returns with its views at the
+    table head: the drain on return refreshes them."""
+    t = make_table(spark, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    run_file_replay(spark, t, replay_dir, ckpt, pipeline_id="p1")
+    view = _view(spark, tmp_path, t)
+    stats = run_file_replay(
+        spark, t, replay_dir, ckpt, pipeline_id="p1", refresh_views=[view],
+    )
+    assert stats.batches == 0
+    _assert_view_at_head(view, t)
+    _assert_no_refresher()
+
+
+def test_injected_crash_drains_views(spark, tmp_path, replay_dir):
+    t = make_table(spark, tmp_path)
+    view = _view(spark, tmp_path, t)
+    stats = run_file_replay(
+        spark, t, replay_dir, str(tmp_path / "ckpt"), pipeline_id="p1",
+        fail_after_batches=1, refresh_views=[view],
+    )
+    assert stats.batches == 1
+    _assert_view_at_head(view, t)
+    _assert_no_refresher()
+
+
+def test_slow_view_refresh_coalesces_off_the_batch_path(
+    spark, tmp_path, replay_dir, monkeypatch
+):
+    """A refresh slower than a micro-batch does not hold the stream back:
+    batches keep committing, and the signals that arrive during one
+    refresh fold into a single later refresh over the whole range."""
+    original = materialize.refresh
+
+    def slow_refresh(view, source):
+        time.sleep(1.0)
+        return original(view, source)
+
+    monkeypatch.setattr(materialize, "refresh", slow_refresh)
+    t = make_table(spark, tmp_path)
+    view = _view(spark, tmp_path, t)
+    stats = run_file_replay(
+        spark, t, replay_dir, str(tmp_path / "ckpt"), pipeline_id="p1",
+        refresh_views=[view],
+    )
+    assert stats.batches == 6
+    bids = [r["batch_id"] for r in lineage_records(t) if r["batch_id"]]
+    assert len(bids) == len(set(bids)) == 6
+    view_commits = [r for r in lineage_records(view) if r["batch_id"]]
+    assert 0 < len(view_commits) < stats.batches
+    _assert_view_at_head(view, t)
+    _assert_no_refresher()
+
+
+def test_view_refresh_error_fails_the_replay(spark, tmp_path, replay_dir, monkeypatch):
+    """A refresh error surfaces from run_file_replay (itself, or as the
+    cause of the stream failure it triggered); committed batches stay
+    committed once, and a re-run without the fault brings the view to the
+    head."""
+    original = materialize.refresh
+    boom = RuntimeError("view refresh fault")
+    calls = []
+
+    def failing_refresh(view, source):
+        calls.append(1)
+        if len(calls) == 2:
+            raise boom
+        return original(view, source)
+
+    monkeypatch.setattr(materialize, "refresh", failing_refresh)
+    t = make_table(spark, tmp_path)
+    view = _view(spark, tmp_path, t)
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception) as err:
+        run_file_replay(
+            spark, t, replay_dir, ckpt, pipeline_id="p1", refresh_views=[view],
+        )
+    assert boom in (err.value, err.value.__cause__)
+    _assert_no_refresher()
+    bids = [r["batch_id"] for r in lineage_records(t) if r["batch_id"]]
+    assert bids and len(bids) == len(set(bids))
+
+    monkeypatch.setattr(materialize, "refresh", original)
+    run_file_replay(spark, t, replay_dir, ckpt, pipeline_id="p1", refresh_views=[view])
+    bids = [r["batch_id"] for r in lineage_records(t) if r["batch_id"]]
+    assert len(bids) == len(set(bids)) == 6
+    _assert_view_at_head(view, t)
+    _assert_no_refresher()
+
+
+def test_refresher_loses_no_signal_under_contention(spark, tmp_path, monkeypatch):
+    """Eight writers signal 1600 commits with a tiny switch interval: the
+    refresher coalesces them, and the signals alone (before any drain)
+    bring the last refresh to the final head."""
+    lock = threading.Lock()
+    head = [0]
+    seen: list[int] = []
+
+    def fake_refresh(view, source):
+        with lock:
+            seen.append(head[0])
+        time.sleep(0.001)
+
+    monkeypatch.setattr(materialize, "refresh", fake_refresh)
+    writers, commits = 8, 200
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        refresher = _ViewRefresher(
+            spark, SimpleNamespace(root=str(tmp_path), branch="main"), [object()]
+        )
+
+        def writer():
+            for _ in range(commits):
+                with lock:
+                    head[0] += 1
+                refresher.signal()
+
+        threads = [threading.Thread(target=writer) for _ in range(writers)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(30)
+            assert not th.is_alive()
+        deadline = time.monotonic() + 30
+        while time.monotonic() < deadline:
+            with lock:
+                if seen and seen[-1] == writers * commits:
+                    break
+            time.sleep(0.01)
+        assert seen[-1] == writers * commits
+        assert len(seen) < writers * commits
+        drain = threading.Thread(target=refresher.drain)
+        drain.start()
+        drain.join(30)
+        assert not drain.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    _assert_no_refresher()
