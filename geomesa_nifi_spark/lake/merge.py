@@ -59,8 +59,8 @@ OP_DELETE = "delete"
 #: update_by_attribute; beyond it the zone-map pruning is skipped (same
 #: guard shape as visibility's MAX_DISTINCT_LABELS)
 MAX_LOOKUP_VALUES = 10_000
-#: ``join_strategy="auto"`` broadcasts the deduped batch only below this
-#: cached size (see :func:`_pick_join_strategy`)
+#: the CoW merge broadcasts the deduped batch only below this cached size
+#: (see :func:`_pick_join_strategy`)
 BROADCAST_THRESHOLD_BYTES = 64 * 1024 * 1024
 
 
@@ -84,7 +84,6 @@ def merge_changes(
     mode: str = "cow",
     auto_compact: bool = True,
     post_dedup_transform=None,
-    join_strategy: str = "auto",
 ) -> MergeResult:
     """Apply a batch of change events to the table, exactly once.
 
@@ -101,17 +100,6 @@ def merge_changes(
     raw stream crosses one shuffle less.  The transform must keep the key,
     ts and op columns; the table's schema is reconciled against the
     *transformed* shape.
-
-    ``join_strategy`` (CoW only): ``"auto"`` (default) picks
-    ``"broadcast"`` — the resolution decomposed into broadcast joins with
-    ZERO shuffle of the target side — when the deduped batch's cached size
-    is under ``BROADCAST_THRESHOLD_BYTES`` AND the touched-bucket target
-    holds ≥``BROADCAST_MIN_TARGET_RATIO``× the batch's rows (from ledger
-    metadata, no extra job); else the ``"full_outer"`` sort-merge join.
-    At 100 TB the touched-bucket target of a CDC batch is orders of
-    magnitude bigger than the batch, so broadcast is the common case; the
-    SMJ takes bulk backfills and batch-sized tables, where hash-building
-    the source per task costs more than its one shuffle saves.
 
     ``mode``:
       * ``"cow"`` — copy-on-write: join against the touched buckets and
@@ -208,9 +196,7 @@ def merge_changes(
                 for f in files_covering(b.files, touched, b_nb)
                 if f.kind == "base"
             )
-            strategy = _pick_join_strategy(
-                s, join_strategy, BROADCAST_THRESHOLD_BYTES, tgt_rows
-            )
+            strategy = _pick_join_strategy(s, BROADCAST_THRESHOLD_BYTES, tgt_rows)
             return b_nb, s, touched, strategy
 
         mod, s, touched, strategy = plan(base)
@@ -509,19 +495,23 @@ BROADCAST_MIN_TARGET_RATIO = 8
 
 def _pick_join_strategy(
     src: DataFrame,
-    join_strategy: str,
     threshold_bytes: int,
     tgt_rows: int | None = None,
 ) -> str:
-    """Stats-driven strategy pick: the deduped source is persisted and
-    already materialized (by the bucket-discovery collect), so its
-    InMemoryRelation size estimate is accurate — the same signal Catalyst's
-    CBO would use.  ``tgt_rows`` (touched-bucket row count from the ledger
-    metadata, zero extra jobs) gates broadcast on the target actually being
-    much bigger than the batch; at 100 TB that is the common CDC case, but
-    a backfill whose batch rivals the table must take the SMJ."""
-    if join_strategy != "auto":
-        return join_strategy
+    """The CoW merge's join: ``"broadcast"`` — the resolution decomposed
+    into broadcast joins with ZERO shuffle of the target side — when the
+    deduped batch's cached size is under ``threshold_bytes`` AND the
+    touched-bucket target holds ≥``BROADCAST_MIN_TARGET_RATIO``× the
+    batch's rows; else the ``"full_outer"`` sort-merge join.
+
+    Stats-driven: the deduped source is persisted and already materialized
+    (by the bucket-discovery collect), so its InMemoryRelation size
+    estimate is accurate — the same signal Catalyst's CBO would use.
+    ``tgt_rows`` comes from the ledger metadata (zero extra jobs).  At
+    100 TB the touched-bucket target of a CDC batch is orders of magnitude
+    bigger than the batch, so broadcast is the common case; the SMJ takes
+    bulk backfills and batch-sized tables, where hash-building the source
+    per task costs more than its one shuffle saves."""
     try:
         stats = src._jdf.queryExecution().optimizedPlan().stats()
         size = int(str(stats.sizeInBytes()))

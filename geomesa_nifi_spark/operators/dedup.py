@@ -38,13 +38,10 @@ _SALT = "_lww_salt"
 
 
 def _order_struct(order_cols: Sequence[str]) -> F.Column:
-    # Coalesce each component so a null never poisons the struct comparison:
-    # null order keys sort lowest (lose LWW), which is the safe default.
-    parts = []
-    for c in order_cols:
-        col = F.col(c)
-        parts.append(col)
-    return F.struct(*parts).alias(_ORD)
+    # Structs compare field by field with null below every value, so a null
+    # order component sorts lowest and loses LWW (``window`` matches this
+    # with ``desc_nulls_last``).
+    return F.struct(*order_cols).alias(_ORD)
 
 
 def lww_dedup(

@@ -122,48 +122,6 @@ def ngram_jaccard_pairs(
     ).filter(F.round(jac, 4) >= threshold)
 
 
-def minhash_signatures(
-    df: DataFrame, k: int = 32, n: int = 2, text_col: str = "text", id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """k-permutation MinHash over shingles: signature[j] = min xxhash64(sh, j).
-
-    Computed without explode: per row, transform the shingle array by each
-    hash seed and take array_min — k codegen'd passes over an in-memory
-    array beats a k-way shuffle every time.
-    """
-    sh = df.select(
-        F.col(id_col).alias("doc_id"),
-        shingles_col(tokens_col(F.col(text_col)), n).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
-    # Hash each shingle STRING exactly once; the k permutations then hash
-    # the resulting longs (8 fixed bytes, far cheaper than re-walking
-    # variable-length strings k times).  Measured ~2x on the signature
-    # stage at sf0.1 with identical downstream semantics (the verify stage
-    # is exact, so the hash family only influences candidate recall —
-    # re-validated 1.0 against the exact oracle at sf0.001/0.01/0.1).
-    hashed = sh.select(
-        "doc_id",
-        F.size("shingles").alias("n_sh"),
-        F.transform("shingles", lambda s: F.xxhash64(s, F.lit(seed))).alias("hs"),
-    )
-
-    def _perm(j: int):
-        # closure factory: a default-arg lambda would be read as the
-        # two-argument (value, index) transform variant
-        return lambda h: F.xxhash64(h, F.lit(j))
-
-    # k inlined array_min branches, deliberately NOT a nested
-    # transform(sequence(k), ...) — a lambda variable crossing into an
-    # inner HOF lambda forces interpreted evaluation (measured 10x slower
-    # end-to-end); the inlined tree stays in codegen.  Its one-time
-    # compile cost (~seconds) amortizes over any real input size.
-    sig = F.array(
-        *[F.array_min(F.transform(F.col("hs"), _perm(j))) for j in range(k)]
-    )
-    return hashed.select("doc_id", "n_sh", sig.alias("signature"))
-
-
 def _gram_strings(tokens, n: int):
     """Word n-gram strings WITHOUT ``array_distinct`` — every downstream
     consumer here is set-shaped (``min`` over permutation hashes is

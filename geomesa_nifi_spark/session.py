@@ -118,14 +118,13 @@ def get_spark(
     # Local-mode shuffle/spill dir (GNS_LOCAL_DIR to override; any real
     # cluster manager overrides spark.local.dir wholesale, so this only
     # ever applies to local[...] runs).  Default to the RAM-backed tmpfs
-    # when it has SHM_MIN_FREE_BYTES free, for the same reason bench.py's
-    # measurement children already did: on a real deployment every
+    # when it has SHM_MIN_FREE_BYTES free: on a real deployment every
     # executor brings its own local disks, so shuffle bandwidth scales with
-    # the cluster — this box's ONE shared disk does not, and a merge's
+    # the cluster — a single host's ONE shared disk does not, and a merge's
     # shuffle competing with the page-cache writeback of a preceding bulk
-    # write was the dominant source of run-to-run variance in the suite
-    # phase.  A smaller (or absent) tmpfs would fill up mid-shuffle, so
-    # below the floor the shuffle goes to the system temp dir on disk.
+    # write was the dominant source of run-to-run variance in local runs.
+    # A smaller (or absent) tmpfs would fill up mid-shuffle, so below the
+    # floor the shuffle goes to the system temp dir on disk.
     local_dir = os.environ.get("GNS_LOCAL_DIR")
     if local_dir is None and local:
         local_dir = _local_dir_for(_statvfs_or_none("/dev/shm"))

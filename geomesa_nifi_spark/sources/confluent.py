@@ -24,9 +24,8 @@ fields drop) — the same by-name adaptation contract as the GeoAvro
 container path (``AvroToPutGeoMesa.scala:60-78``).
 
 Scale shape: encode/decode are per-record Python over Arrow batches
-(``mapInArrow``), one task per input partition, no
-shuffle — the same measured ceiling as the GeoAvro container decode
-(``bench.py`` kafka_avro section; ~19k ev/s/core).  Registry-framed
+(``mapInArrow``), one task per input partition, no shuffle — the same
+per-record ceiling as the GeoAvro container decode.  Registry-framed
 topics are one-record-per-message by construction, so there is no
 container amortization to lose.
 """
@@ -100,10 +99,6 @@ class InMemorySchemaRegistry:
             raise SchemaRegistryError(f"subject {subject!r} has no versions")
         sid = versions[-1]
         return sid, json.loads(self._json_by_id[sid])
-
-
-def _frame(schema_id: int, body: bytes) -> bytes:
-    return bytes([CONFLUENT_MAGIC]) + int(schema_id).to_bytes(4, "big") + body
 
 
 def confluent_encode_records(

@@ -77,8 +77,8 @@ def lineage_records(table: LakeTable) -> list[dict]:
 
 
 class BatchMetrics:
-    """Append-only JSONL of per-batch throughput, for the bench harness and
-    for operators to watch lag (≙ PrometheusRegistryService.scala:27-96)."""
+    """Append-only JSONL of per-batch throughput, for operators to watch
+    lag (≙ PrometheusRegistryService.scala:27-96)."""
 
     def __init__(self, path: str | None):
         self.path = path

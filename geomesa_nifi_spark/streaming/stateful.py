@@ -30,7 +30,6 @@ pandas before touching state — O(distinct keys in batch) state ops.
 
 from __future__ import annotations
 
-import json
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -196,15 +195,4 @@ def lww_state_stream(
                 else GroupStateTimeout.NoTimeout
             ),
         )
-    )
-
-
-def payload_to_columns(changelog: DataFrame, schema: T.StructType) -> DataFrame:
-    """Expand the JSON payload back into typed columns (the lake's shape)."""
-    return changelog.select(
-        *[c for c in changelog.columns if c != "payload"],
-        F.from_json("payload", schema).alias("_p"),
-    ).select(
-        *[c for c in changelog.columns if c != "payload"],
-        "_p.*",
     )

@@ -417,22 +417,25 @@ def _mixed_batches():
 
 
 @pytest.mark.parametrize("strategy", ["full_outer", "broadcast"])
-def test_join_strategies_identical_state(spark, tmp_path, strategy):
+def test_join_strategies_identical_state(spark, tmp_path, monkeypatch, strategy):
+    monkeypatch.setattr(
+        "geomesa_nifi_spark.lake.merge._pick_join_strategy", lambda *a: strategy
+    )
     table = LakeTable.create(
         spark, str(tmp_path / f"t-{strategy}"), SCHEMA,
         key_col="url", ts_col="warc_ts", tiebreak_col="offset", num_buckets=8,
     )
     for i, rows in enumerate(_mixed_batches()):
-        merge_changes(
-            table, spark.createDataFrame(rows, CHANGE),
-            batch_id=f"js-{i}", join_strategy=strategy,
-        )
+        merge_changes(table, spark.createDataFrame(rows, CHANGE), batch_id=f"js-{i}")
     state = {r["url"]: (r["text"], r["offset"]) for r in table.scan().collect()}
     assert state == {"a": ("back", 9), "b": ("b1", 1), "e": ("e1", 4)}
 
 
 @pytest.mark.parametrize("strategy", ["full_outer", "broadcast"])
-def test_join_strategies_identical_partial_update(spark, tmp_path, strategy):
+def test_join_strategies_identical_partial_update(spark, tmp_path, monkeypatch, strategy):
+    monkeypatch.setattr(
+        "geomesa_nifi_spark.lake.merge._pick_join_strategy", lambda *a: strategy
+    )
     table = LakeTable.create(
         spark, str(tmp_path / f"p-{strategy}"), SCHEMA,
         key_col="url", ts_col="warc_ts", tiebreak_col="offset", num_buckets=8,
@@ -441,16 +444,13 @@ def test_join_strategies_identical_partial_update(spark, tmp_path, strategy):
         table,
         spark.createDataFrame([ev("a", 1, "a1"), ev("b", 1, "b1")], CHANGE),
         batch_id="p-0",
-        join_strategy=strategy,
     )
     upd = spark.createDataFrame(
         [Row(url="a", warc_ts=ts(5), offset=5, lang="fr"),
          Row(url="zz", warc_ts=ts(5), offset=5, lang="xx")],  # unmatched -> reject
         T.StructType([f for f in SCHEMA.fields if f.name != "text"]),
     )
-    r = merge_changes(
-        table, upd, batch_id="p-1", update_mode="partial", join_strategy=strategy,
-    )
+    r = merge_changes(table, upd, batch_id="p-1", update_mode="partial")
     state = {x["url"]: (x["text"], x["lang"]) for x in table.scan().collect()}
     assert state == {"a": ("a1", "fr"), "b": ("b1", "en")}
     assert r.metrics.get("rejected") == 1
@@ -492,9 +492,8 @@ def test_auto_strategy_picks_broadcast_for_small_batch(spark, tmp_path):
 
     small = spark.createDataFrame([ev("a", 1, "x")], CHANGE).persist()
     small.count()
-    assert _pick_join_strategy(small, "auto", 64 * 1024 * 1024) == "broadcast"
-    assert _pick_join_strategy(small, "auto", 1) == "full_outer"
-    assert _pick_join_strategy(small, "full_outer", 1) == "full_outer"
+    assert _pick_join_strategy(small, 64 * 1024 * 1024) == "broadcast"
+    assert _pick_join_strategy(small, 1) == "full_outer"
     small.unpersist()
 
 
@@ -511,18 +510,18 @@ def test_auto_strategy_requires_target_much_bigger(spark):
     src.count()
     mb64 = 64 * 1024 * 1024
     # target barely bigger than the batch -> SMJ
-    assert _pick_join_strategy(src, "auto", mb64, tgt_rows=10) == "full_outer"
+    assert _pick_join_strategy(src, mb64, tgt_rows=10) == "full_outer"
     assert (
-        _pick_join_strategy(src, "auto", mb64, tgt_rows=10 * BROADCAST_MIN_TARGET_RATIO - 1)
+        _pick_join_strategy(src, mb64, tgt_rows=10 * BROADCAST_MIN_TARGET_RATIO - 1)
         == "full_outer"
     )
     # target >= ratio x batch -> broadcast
     assert (
-        _pick_join_strategy(src, "auto", mb64, tgt_rows=10 * BROADCAST_MIN_TARGET_RATIO)
+        _pick_join_strategy(src, mb64, tgt_rows=10 * BROADCAST_MIN_TARGET_RATIO)
         == "broadcast"
     )
     # empty target (first batch): nothing to save by broadcasting
-    assert _pick_join_strategy(src, "auto", mb64, tgt_rows=0) == "full_outer"
+    assert _pick_join_strategy(src, mb64, tgt_rows=0) == "full_outer"
     src.unpersist()
 
 

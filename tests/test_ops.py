@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -10,6 +13,7 @@ from geomesa_nifi_spark.functions.multimodal import (
     extract_media_features,
     synthetic_media,
 )
+from geomesa_nifi_spark.operators.dedup import lww_dedup
 from geomesa_nifi_spark.operators.docdedup import (
     exact_duplicates,
     minhash_lsh_pairs,
@@ -23,6 +27,21 @@ from geomesa_nifi_spark.operators.textops import text_stats
 
 def docs_df(spark, rows):
     return spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(rows)])
+
+
+@pytest.mark.parametrize("strategy", ["maxby", "window", "salted", "maxby-columnar"])
+def test_lww_null_order_component_loses(spark, strategy):
+    """A null order component sorts lowest: the row carrying it loses LWW,
+    whatever the other component holds."""
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        ("a", None, 9, "lose"), ("a", t0, 1, "win"),      # null ts
+        ("b", t0, None, "lose"), ("b", t0, 0, "win"),     # null tiebreak
+        ("c", None, 1, "lose"), ("c", None, 2, "win"),    # both ts null
+    ]
+    df = spark.createDataFrame(rows, "k string, ts timestamp, tb long, v string")
+    got = lww_dedup(df, "k", ["ts", "tb"], strategy=strategy).collect()
+    assert {r["k"]: r["v"] for r in got} == {"a": "win", "b": "win", "c": "win"}
 
 
 def test_exact_duplicates(spark):

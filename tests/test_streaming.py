@@ -426,9 +426,17 @@ def test_slow_view_refresh_coalesces_off_the_batch_path(
     batches keep committing, and the signals that arrive during one
     refresh fold into a single later refresh over the whole range."""
     original = materialize.refresh
+    held = []
 
     def slow_refresh(view, source):
-        time.sleep(1.0)
+        # Slower than a micro-batch on any host: the first refresh waits
+        # until the stream commits past the version it was signalled for.
+        # The deadline only matters if the stream waits on the refresher.
+        if not held:
+            held.append(source.snapshot().version)
+            deadline = time.monotonic() + 60
+            while source.snapshot().version == held[0] and time.monotonic() < deadline:
+                time.sleep(0.1)
         return original(view, source)
 
     monkeypatch.setattr(materialize, "refresh", slow_refresh)
