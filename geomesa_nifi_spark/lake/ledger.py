@@ -523,13 +523,6 @@ class Ledger:
             out[group] = (ref, paths)
         return out
 
-    def _write_manifest(self, version: int, bucket: int, kind: str,
-                        files: list[DataFile]) -> dict[str, Any]:
-        """Write + durably publish one manifest (single-manifest callers)."""
-        staged = self._stage_manifest(version, bucket, kind, files)
-        self._publish_manifests([staged])
-        return staged[0]
-
     def _stage_manifest(self, version: int, bucket: int, kind: str,
                         files: list[DataFile]):
         """Write a manifest tmp file WITHOUT fsync; returns

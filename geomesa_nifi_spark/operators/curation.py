@@ -15,28 +15,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geomesa_nifi_spark.operators.docdedup import minhash_lsh_pairs, ngram_jaccard_pairs
+from geomesa_nifi_spark.operators.docdedup import minhash_lsh_pairs
 from geomesa_nifi_spark.operators.textops import text_stats
 
 
-def near_dup_losers(
-    df: DataFrame, threshold: float = 0.4, n: int = 2, dedup: str = "minhash"
-) -> DataFrame:
+def near_dup_losers(df: DataFrame, threshold: float = 0.4, n: int = 2) -> DataFrame:
     """One row per document eliminated by near-dup pairing (the larger id
     of each pair loses — deterministic, keeps the earliest-crawled).
 
-    ``dedup="minhash"`` (default) generates candidates with banded
-    MinHash-LSH and verifies them with exact Jaccard — candidate generation
-    is an equi-join, linear-ish in the corpus, the only shape that survives
-    web scale.  ``dedup="exact"`` runs the full inverted-index pair join:
-    exact by construction but quadratic on common shingles — the
-    small-corpus verifier, not the default."""
-    if dedup == "minhash":
-        pairs = minhash_lsh_pairs(df, threshold=threshold, n=n)
-    elif dedup == "exact":
-        pairs = ngram_jaccard_pairs(df, threshold=threshold, n=n)
-    else:
-        raise ValueError(f"dedup must be 'minhash' or 'exact', got {dedup!r}")
+    Pairs come from banded MinHash-LSH candidates verified with exact
+    Jaccard — candidate generation is an equi-join, linear-ish in the
+    corpus, the only shape that survives web scale.  The exact quadratic
+    pair set (``ngram_jaccard_pairs``) is its small-corpus reference."""
+    pairs = minhash_lsh_pairs(df, threshold=threshold, n=n)
     return pairs.select(F.col("doc_b").alias("doc_id")).distinct()
 
 
@@ -45,11 +36,10 @@ def curate(
     min_quality: float = 0.5,
     lang: str | None = "en",
     jaccard_threshold: float = 0.4,
-    dedup: str = "minhash",
 ) -> DataFrame:
     """Documents that survive dedup + quality + language gates."""
     stats = text_stats(df)
-    losers = near_dup_losers(df, threshold=jaccard_threshold, dedup=dedup)
+    losers = near_dup_losers(df, threshold=jaccard_threshold)
     # NO broadcast hint on the loser set: on a real crawl near-dup losers
     # can be 30-50% of the corpus, and a forced broadcast OOMs the
     # executors.  AQE broadcasts small loser sets on its own (runtime

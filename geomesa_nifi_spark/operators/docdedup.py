@@ -14,12 +14,19 @@ Scale shapes (the point of each variant at 100 TB):
 * SimHash: 48-bit signed-projection sketch; near-dup = small Hamming
   distance (bit_count(a ^ b)), cheap to index/block on.
 
-Everything is built-in expressions (xxhash64 as the hash family — codegen,
-no Python).  Shingling uses ``F.slice`` over the token array inside
-``transform(sequence(...))`` — no explode until the inverted index needs it.
+Every sketch is one relational recipe: explode the tokens (or their
+n-gram windows), apply built-in expressions per row, and fold with a single
+``groupBy`` aggregate — all whole-stage codegen, no higher-order-function
+lambdas (those are ``CodegenFallback`` and run interpreted per element).
+In-bucket candidate pairs come from an equi-self-join on the bucket
+columns (``bucket_pairs``); the signature is a ``groupBy`` whose exchange
+both join sides reuse, so it is computed once.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,47 +34,44 @@ from pyspark.sql import functions as F
 TOKEN_SPLIT = "[^a-z0-9]+"
 
 
-def tokens_col(text, min_len: int = 1):
-    arr = F.split(F.lower(text), TOKEN_SPLIT)
-    return F.filter(arr, lambda x: F.length(x) >= min_len)
+def tokens_col(text):
+    return F.array_remove(F.split(F.lower(text), TOKEN_SPLIT), "")
 
 
-def shingles_col(tokens, n: int):
-    """Distinct word n-grams as strings; empty array when too short.
+def _windows(tokens, n: int):
+    """Every run of ``n`` consecutive tokens as an ``array<struct>`` of n
+    fields: ``arrays_zip`` over n shifted slices of one span.  Documents
+    with fewer than ``n`` tokens get a zero span, hence an empty array (no
+    slice ever starts at 0); a null text gives null, which explodes to no
+    rows."""
+    span = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(0))
+    return F.arrays_zip(*[F.slice(tokens, i + 1, span) for i in range(n)])
 
-    The short-doc guard must short-circuit the ``sequence`` itself:
-    ``sequence(1, 0)`` DESCENDS to ``[1, 0]`` and the ``slice`` at start 0
-    throws — a latent crash for any document with fewer than ``n`` tokens
-    (impossible on the fixture corpora, fatal on a real crawl)."""
-    count = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
+
+def _gram(window: str):
+    """The n-gram string of an exploded ``_windows`` struct column."""
+    return F.concat_ws(" ", f"{window}.*")
+
+
+def bit_mask(conds):
+    """A long with bit ``b`` set iff ``conds[b]`` holds (a sketch's sign
+    bits recomposed; fewer than 63 conditions keep it positive)."""
+    one, zero = F.lit(1).cast("long"), F.lit(0).cast("long")
+    return reduce(
+        operator.add, [F.shiftleft(F.when(c, one).otherwise(zero), b) for b, c in enumerate(conds)]
     )
-    return F.array_distinct(
-        F.when(count >= 1, grams).otherwise(F.array().cast("array<string>"))
-    )
 
 
-def bucket_pair_structs(ids):
-    """Ordered in-bucket pair expansion for LSH candidate generation:
-    ``array<struct(a, b)>`` with ``a < b`` from an array of keys (or of
-    structs whose FIRST field is the ordering key — struct comparison is
-    lexicographic by field order).  Used after a
-    ``groupBy(bucket).agg(collect_set(...))`` so the expensive signature
-    subtree is computed ONCE — the classic banding self-join evaluates it
-    once per join side (measured ~2x of several operators' cost)."""
-    return F.filter(
-        F.flatten(
-            F.transform(
-                ids,
-                lambda a: F.transform(
-                    ids, lambda b: F.struct(a.alias("a"), b.alias("b"))
-                ),
-            )
-        ),
-        lambda p: p["a"] < p["b"],
-    )
+def bucket_pairs(index: DataFrame, keys: list[str], id_col: str) -> DataFrame:
+    """In-bucket pairs of an inverted index: equi-self-join on the bucket
+    ``keys`` with ``a.<id_col> < b.<id_col>``; both sides' columns stay
+    reachable as ``a.*`` / ``b.*``.  A pair sharing several buckets appears
+    once per shared bucket — callers ``distinct`` what they keep."""
+    a, b = index.alias("a"), index.alias("b")
+    on = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for k in keys:
+        on = (F.col(f"a.{k}") == F.col(f"b.{k}")) & on
+    return a.join(b, on)
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -86,12 +90,14 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
 
 def _shingle_index(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    sh = df.select(
-        F.col(id_col).alias("doc_id"),
-        shingles_col(tokens_col(F.col(text_col)), n).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
-    return sh.select(
-        "doc_id", F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle")
+    # tokens hold no spaces, so distinct windows are exactly distinct grams
+    return (
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            F.array_distinct(_windows(tokens_col(F.col(text_col)), n)).alias("_ws"),
+        )
+        .select("doc_id", F.size("_ws").alias("n_sh"), F.explode("_ws").alias("_w"))
+        .select("doc_id", "n_sh", _gram("_w").alias("shingle"))
     )
 
 
@@ -122,32 +128,6 @@ def ngram_jaccard_pairs(
     ).filter(F.round(jac, 4) >= threshold)
 
 
-def _gram_strings(tokens, n: int):
-    """Word n-gram strings WITHOUT ``array_distinct`` — every downstream
-    consumer here is set-shaped (``min`` over permutation hashes is
-    duplicate-blind; the verify sets go through ``collect_set``), so the
-    per-row distinct pass, measured as the single most expensive node of
-    the old chain, bought nothing.  For the declared n=2 case the grams
-    come from ONE ``zip_with`` over two array slices (two slices per ROW)
-    instead of a ``slice`` + ``concat_ws`` per SHINGLE — higher-order
-    lambdas run interpreted (no whole-stage codegen), so shrinking the
-    per-element tree from ~20 interpreted nodes to ~3 is a direct win."""
-    if n == 2:
-        span = F.greatest(F.size(tokens) - F.lit(1), F.lit(0))
-        return F.zip_with(
-            F.slice(tokens, 1, span),
-            F.slice(tokens, 2, span),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    count = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(0))
-    grams = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
-    )
-    # sequence(1, 0) descends — guard like shingles_col does
-    return F.when(count >= 1, grams).otherwise(F.array().cast("array<string>"))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.4,
@@ -156,36 +136,32 @@ def minhash_lsh_pairs(
     n: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    verify: bool = True,
     seed: int = 42,
 ) -> DataFrame:
     """LSH banding: docs agreeing on any band become candidates; candidates
-    are verified with exact Jaccard when ``verify`` (the production shape:
-    cheap recall, exact precision).
+    are verified with exact Jaccard (cheap recall, exact precision).
 
-    Physical shape (optimization round 6): shingle hashes explode into a
-    ``groupBy(doc_id)`` carrying the k permutation ``min``s AND the
-    ``collect_set`` of shingle hashes — ONE whole-stage-codegen aggregate
-    replaces the old per-row array tree (k interpreted ``transform``
-    passes; higher-order lambdas never enter codegen) and feeds banding
-    and verification from the same exchange (AQE reuses it).  The
-    signature values are bit-identical to the old formulation (same
-    ``xxhash64(concat_ws shingle, seed)`` / ``xxhash64(h, j)`` family), so
-    the candidate set is unchanged; verification intersects 64-bit shingle
+    Physical shape: shingle hashes explode into ONE ``groupBy(doc_id)``
+    carrying the k permutation ``min``s AND the ``collect_set`` of shingle
+    hashes.  Banding posexplodes the signature into a (band, band_hash)
+    index whose ``bucket_pairs`` self-join yields the candidates, and
+    verification joins each candidate to its two hash sets from the same
+    aggregate — every reader of the signature reuses its exchange.
+    Signatures use the ``xxhash64(concat_ws shingle, seed)`` /
+    ``xxhash64(h, j)`` family; verification intersects 64-bit shingle
     *hash* sets instead of shingle strings — Jaccard over the hashed sets
     equals string-set Jaccard unless xxhash64 collides inside a document
     pair (checked collision-free on the gate corpora; at web scale a
     collision perturbs one pair's jaccard by ~1/|set|).  Map-side partial
-    aggregation keeps the shuffle at one partial row per doc per task, so
-    the relational shape scales like the array shape did."""
+    aggregation keeps the shuffle at one partial row per doc per task."""
     rows = k // bands
     ex = (
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(_gram_strings(tokens_col(F.col(text_col)), n)).alias("_g"),
+            F.explode(_windows(tokens_col(F.col(text_col)), n)).alias("_w"),
         )
         # one hash per shingle occurrence; dedup happens in the aggregate
-        .select("doc_id", F.xxhash64(F.col("_g"), F.lit(seed)).alias("h"))
+        .select("doc_id", F.xxhash64(_gram("_w"), F.lit(seed)).alias("h"))
     )
     per_doc = ex.groupBy("doc_id").agg(
         *[F.min(F.xxhash64(F.col("h"), F.lit(j))).alias(f"_s{j}") for j in range(k)],
@@ -198,21 +174,11 @@ def minhash_lsh_pairs(
         ]
     )
     banded = per_doc.select("doc_id", F.posexplode(band_arr).alias("band", "band_hash"))
-    # Pairs come from grouping each (band, bucket) and expanding in-bucket
-    # combinations with array transforms — ONE pass over the signature
-    # subtree and one shuffle.  The classic self-join spelling reads
-    # `banded` twice, which re-runs the whole signature computation per
-    # side (measured: it doubled the operator's cost).
     cands = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.collect_set("doc_id").alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode(bucket_pair_structs(F.col("ids"))).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        bucket_pairs(banded, ["band", "band_hash"], "doc_id")
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    if not verify:
-        return cands
     # Verify ONLY the candidates: join each pair to its two shingle-hash
     # sets and intersect in-memory (array_intersect over longs — regular
     # codegen, no lambda), instead of re-running the whole-corpus
@@ -237,53 +203,37 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 7,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """SimHash over tokens: per bit, sum of ±1 votes from each token's hash;
-    bit set iff the vote is positive.  Pure aggregate — no explode needed:
-    votes are computed per-document over the token array.
+    bit set iff the vote is positive.  Tokens explode and are hashed once
+    each; one ``groupBy(doc_id)`` sums the 48 bit votes.  Documents without
+    tokens produce no row.
 
-    ``hash_family="md5"`` (default) derives the 48-bit token hash from the
-    first 12 hex chars of md5(token || seed) — byte-identical reproducible in
-    any engine with md5 (the DuckDB oracle recomputes it).  ``"xxhash64"`` is
-    the cheaper JVM-only family for production throughput."""
-    toks = df.select(
-        F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("toks")
-    ).filter(F.size("toks") > 0)
-
-    if hash_family == "md5":
-        def _hash(t):
-            return F.conv(
-                F.substring(F.md5(F.concat(t, F.lit(str(seed)))), 1, 12), 16, 10
-            ).cast("long")
-    elif hash_family == "xxhash64":
-        def _hash(t):
-            return F.xxhash64(t, F.lit(seed))
-    else:
-        raise ValueError(f"hash_family must be 'md5' or 'xxhash64', got {hash_family!r}")
-
-    # hash each token ONCE, then run the 48 bit-vote aggregates over the
-    # precomputed array (48 passes over longs, not 48 md5 evaluations/token)
-    hashed = toks.withColumn("hs", F.transform(F.col("toks"), _hash))
-
-    def _vote(b: int):
-        # closure factory: a default-arg lambda would change the UDF arity
-        return lambda acc, x: acc + F.when(
-            F.shiftright(x, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_votes = [
-        F.aggregate(F.col("hs"), F.lit(0), _vote(b)) for b in range(SIMHASH_BITS)
+    The 48-bit token hash is the first 12 hex chars of md5(token || seed) —
+    byte-identical reproducible in any engine with md5 (the DuckDB oracle
+    recomputes it)."""
+    hashed = df.select(
+        F.col(id_col).alias("doc_id"), F.explode(tokens_col(F.col(text_col))).alias("_t")
+    ).select(
+        "doc_id",
+        F.conv(
+            F.substring(F.md5(F.concat(F.col("_t"), F.lit(str(seed)))), 1, 12), 16, 10
+        ).cast("long").alias("h"),
+    )
+    votes = [
+        F.sum(F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1))
+        for b in range(SIMHASH_BITS)
     ]
-    sig = None
-    for b, vote in enumerate(bit_votes):
-        bit = F.when(vote > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, b)
-        sig = term if sig is None else sig + term
-    return hashed.select("doc_id", sig.alias("simhash"))
+    return hashed.groupBy("doc_id").agg(bit_mask([v > 0 for v in votes]).alias("simhash"))
 
 
-def simhash_near_pairs(df: DataFrame, max_hamming: int = 8, **kw) -> DataFrame:
+def simhash_near_pairs(
+    df: DataFrame,
+    max_hamming: int = 8,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    seed: int = 7,
+) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance, band-blocked.
 
     Pigeonhole blocking: the 48 signature bits are split into
@@ -293,9 +243,9 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 8, **kw) -> DataFrame:
     then get verified with the true bit_count(xor).  Replaces the all-pairs
     cartesian join: at web scale candidate volume is driven by bucket
     collisions, not N^2."""
-    sigs = simhash(df, **kw)
     if max_hamming >= SIMHASH_BITS:
         raise ValueError(f"max_hamming must be < {SIMHASH_BITS}")
+    sigs = simhash(df, text_col=text_col, id_col=id_col, seed=seed)
     # floor width so every chunk holds >= 1 real signature bit: a zero-width
     # tail chunk would match ALL pairs and silently degrade to the cartesian
     width = max(1, SIMHASH_BITS // (max_hamming + 1))
@@ -307,23 +257,16 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 8, **kw) -> DataFrame:
         ]
     )
     index = sigs.select("doc_id", "simhash", F.posexplode(chunks).alias("chunk", "cval"))
-    # In-bucket pair expansion via groupBy + array transforms — ONE pass
-    # over the signature subtree; the self-join spelling computed the 48
-    # bit-vote aggregates twice (once per side).  Signatures ride in the
-    # bucket structs so the Hamming verify needs no further join.
-    buckets = (
-        index.groupBy("chunk", "cval")
-        .agg(F.collect_set(F.struct("doc_id", "simhash")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    dist = F.bit_count(F.col("p.a.simhash").bitwiseXOR(F.col("p.b.simhash")))
+    # signatures ride in the index rows, so the Hamming verify needs no
+    # further join
+    dist = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        buckets.select(F.explode(bucket_pair_structs(F.col("ids"))).alias("p"))
+        bucket_pairs(index, ["chunk", "cval"], "doc_id")
         .select(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.b.doc_id").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
             dist.alias("hamming"),
         )
-        .distinct()
         .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )

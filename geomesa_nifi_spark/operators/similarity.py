@@ -4,9 +4,16 @@
   against the corpus, dot products via ``zip_with``/``aggregate`` (JVM
   expressions, no Python), rank with a window.  The correctness baseline.
 * ``rhp_ann_topk`` — the scale path: random-hyperplane LSH.  Deterministic
-  ±1 hyperplanes derived from xxhash64 bucket the corpus; only same-bucket
-  (plus optional multi-probe) pairs get exact scoring.  At 10^9 vectors the
-  bucket join replaces the O(Q×N) cross product.
+  ±1 hyperplanes derived from md5 bucket the corpus; only same-bucket
+  pairs get exact scoring.  At 10^9 vectors the bucket join replaces the
+  O(Q×N) cross product.
+
+RHP buckets follow the package's one sketch recipe (``rhp_buckets``):
+posexplode the vector, join the broadcast plane-sign table, and fold the
+projections with ``groupBy`` sums; in-bucket pairs come from
+``docdedup.bucket_pairs``.  ``_dot`` is the only higher-order function
+left: it is exact pair scoring, not a sketch, and Spark has no built-in
+array dot product.
 
 Ranking is by (rounded sim desc, vec_id asc) so results are stable across
 engines and float summation orders.
@@ -16,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from geomesa_nifi_spark.operators.docdedup import bit_mask, bucket_pairs
 
 
 def _dot(a, b):
@@ -73,27 +82,31 @@ def plane_signs(planes: int, dim: int, seed: int = 13) -> list[list[float]]:
     ]
 
 
-def rhp_signature(vec, planes: int, dim: int, seed: int = 13):
-    """LSH bucket id: sign bits of ``planes`` deterministic ±1 hyperplanes.
+def rhp_buckets(
+    corpus: DataFrame, planes: int, dim: int, tables: int = 1, seed: int = 13
+) -> DataFrame:
+    """LSH buckets ``(vec_id, tbl, bucket)`` of a ``(vec_id, vec)`` corpus:
+    per table ``t``, the sign bits of ``planes`` deterministic ±1
+    hyperplanes seeded ``seed + 1000 * t``.
 
-    The planes are embedded as literal arrays (computed driver-side, a few
-    KB): executors evaluate pure constant-vector dot products — no side
-    data, no per-element hashing at any scale.
-    """
-    sig = None
-    for p, row in enumerate(plane_signs(planes, dim, seed)):
-        # ONE array literal per plane (not dim CreateArray children): with
-        # tables x planes signatures the per-element spelling put ~10^4
-        # literal nodes in the plan and analysis/codegen dominated wall
-        # clock at any input size
-        plane = F.lit(row)
-        proj = F.aggregate(
-            F.zip_with(vec, plane, lambda x, s: x * s), F.lit(0.0), lambda a, b: a + b
-        )
-        bit = F.when(proj > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, p)
-        sig = term if sig is None else sig + term
-    return sig
+    The vector posexplodes and joins a broadcast ``(tbl, i, s0..s{planes-1})``
+    sign table built driver-side (tables x dim rows); one
+    ``groupBy(vec_id, tbl)`` takes each projection as ``sum(x * s<p>)`` and
+    sets bit ``p`` iff it is positive.  A vector's rows reach its groups in
+    ``i`` order inside one task, so each double sum is the left-to-right
+    fold over the vector."""
+    signs = [plane_signs(planes, dim, seed + 1000 * t) for t in range(tables)]
+    table = corpus.sparkSession.createDataFrame(
+        [(t, i, *[signs[t][p][i] for p in range(planes)]) for t in range(tables) for i in range(dim)],
+        ", ".join(["tbl int", "i int"] + [f"s{p} double" for p in range(planes)]),
+    )
+    projs = [F.sum(F.col("x") * F.col(f"s{p}")) for p in range(planes)]
+    return (
+        corpus.select("vec_id", F.posexplode("vec").alias("i", "x"))
+        .join(F.broadcast(table), "i")
+        .groupBy("vec_id", "tbl")
+        .agg(bit_mask([proj > 0 for proj in projs]).alias("bucket"))
+    )
 
 
 def embedding_near_dups(
@@ -139,29 +152,9 @@ def embedding_near_dups(
             sim.alias("sim"),
         ).filter(F.col("sim") >= threshold)
 
-    # One signature per table; posexplode -> (table, bucket) inverted index.
-    sigs = F.array(
-        *[rhp_signature(F.col("vec"), planes, dim, seed=seed + 1000 * t) for t in range(tables)]
-    )
-    index = corpus.select(
-        "vec_id", F.posexplode(sigs).alias("tbl", "bucket")
-    )
-    # Candidates via the equi-self-join — deliberately NOT the
-    # groupBy + in-bucket array expansion used by minhash/simhash: with
-    # ``planes``-bit buckets each bucket holds a constant FRACTION of the
-    # corpus, so candidate volume is large and per-candidate cost matters —
-    # the join stays in codegen (~0.1us/pair) while nested-lambda array
-    # expansion is interpreted (~4us/pair).  The price (the signature
-    # subtree evaluates once per join side) is O(corpus), dwarfed by the
-    # O(pairs) candidate stream it feeds.
-    a, b = index.alias("a"), index.alias("b")
+    index = rhp_buckets(corpus, planes, dim, tables, seed)
     cands = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        bucket_pairs(index, ["tbl", "bucket"], "vec_id")
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
@@ -187,7 +180,8 @@ def rhp_ann_topk(
     corpus = emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("bucket", rhp_signature(F.col("vec"), planes, dim))
+    )
+    corpus = corpus.join(rhp_buckets(corpus, planes, dim).select("vec_id", "bucket"), "vec_id")
     queries = corpus.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), F.col("bucket")
     )

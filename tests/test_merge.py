@@ -12,7 +12,6 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geomesa_nifi_spark.lake import (
@@ -467,8 +466,6 @@ def test_broadcast_strategy_no_target_shuffle(spark, tmp_path):
     )
     merge_changes(table, spark.createDataFrame([ev("a", 1, "a1")], CHANGE), batch_id="b-0")
     src = spark.createDataFrame([ev("a", 2, "a2"), ev("x", 2, "x1")], CHANGE)
-    from geomesa_nifi_spark.lake.table import DELETED_COL
-    from pyspark.sql import functions as F
 
     tgt = table.scan(include_tombstones=True)
     resolved = _resolve(

@@ -69,16 +69,18 @@ def test_ngram_jaccard_and_minhash_agree(spark):
     assert lsh == exact  # verified candidates == exact pairs
 
 
-def test_gram_strings_match_shingles_col_as_sets(spark):
-    """The r6 relational MinHash chain drops ``array_distinct`` from gram
-    generation (min-aggregation and ``collect_set`` are duplicate-blind)
-    and uses a ``zip_with`` fast path for n=2: as SETS the grams must equal
-    the old ``shingles_col`` output for every n."""
-    from pyspark.sql import functions as F
+def test_ngram_windows_match_python_reference(spark):
+    """Word n-grams from the shifted-slice ``arrays_zip`` windows equal a
+    pure-Python n-gram reference for every n: in order with repeats (the
+    MinHash input) and as distinct sets with their size (the Jaccard
+    index), including documents too short to hold one gram."""
+    import re
 
     from geomesa_nifi_spark.operators.docdedup import (
-        _gram_strings,
-        shingles_col,
+        TOKEN_SPLIT,
+        _gram,
+        _shingle_index,
+        _windows,
         tokens_col,
     )
 
@@ -87,16 +89,101 @@ def test_gram_strings_match_shingles_col_as_sets(spark):
         "repeat repeat repeat repeat",
         "one",
         "",
+        None,
         "x y x y x y",
+        "...Leading, and trailing!!",
+        "two words",
+        "a b c d",
     ]
-    df = docs_df(spark, texts)
-    for n in (2, 3):
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    def ref(text, n):
+        toks = [t for t in re.split(TOKEN_SPLIT, (text or "").lower()) if t]
+        return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+    for n in (1, 2, 3, 5):
+        grams = {}
         rows = df.select(
-            F.sort_array(F.array_distinct(_gram_strings(tokens_col(F.col("text")), n))).alias("new"),
-            F.sort_array(shingles_col(tokens_col(F.col("text")), n)).alias("old"),
-        ).collect()
-        for r in rows:
-            assert r.new == r.old, (n, r)
+            "doc_id", F.posexplode(_windows(tokens_col(F.col("text")), n)).alias("pos", "_w")
+        ).select("doc_id", "pos", _gram("_w").alias("g")).collect()
+        for r in sorted(rows):
+            grams.setdefault(r.doc_id, []).append(r.g)
+        index = {}
+        for r in _shingle_index(df, "text", "doc_id", n).collect():
+            n_sh, sh = index.setdefault(r.doc_id, (r.n_sh, set()))
+            assert r.n_sh == n_sh
+            sh.add(r.shingle)
+        for doc_id, text in enumerate(texts):
+            want = ref(text, n)
+            assert grams.get(doc_id, []) == want, (n, text)
+            n_sh, sh = index.get(doc_id, (0, set()))
+            assert sh == set(want) and n_sh == len(sh), (n, text)
+
+
+def test_rhp_buckets_match_python_reference(spark):
+    """RHP buckets equal a pure-Python reference — ``plane_signs`` and a
+    left-to-right float sum per projection — bit for bit: the grouped
+    ``sum`` folds each vector's products in element order."""
+    from geomesa_nifi_spark.operators.similarity import plane_signs, rhp_buckets
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    corpus = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
+    vecs = {r.vec_id: r.vec for r in corpus.collect()}
+    for planes, tables in ((8, 1), (3, 48)):
+        want = {}
+        for t in range(tables):
+            signs = plane_signs(planes, 64, 13 + 1000 * t)
+            for vec_id, vec in vecs.items():
+                bucket = 0
+                for p, row in enumerate(signs):
+                    proj = 0.0
+                    for x, sign in zip(vec, row):
+                        proj += x * sign
+                    bucket += (proj > 0) << p
+                want[(vec_id, t)] = bucket
+        got = {(r.vec_id, r.tbl): r.bucket for r in rhp_buckets(corpus, planes, 64, tables).collect()}
+        assert got == want, (planes, tables)
+
+
+def test_sketches_are_relational(spark):
+    """Every sketch is explode -> built-in expressions -> groupBy: the only
+    higher-order functions in ``operators/`` are ``similarity._dot``'s
+    (exact cosine scoring, not a sketch).  In-bucket pairs are an
+    equi-self-join that reuses the signature's exchange on both sides and
+    never plans an all-pairs join."""
+    import ast
+    import pathlib
+    import re
+
+    import geomesa_nifi_spark.operators as ops
+    from geomesa_nifi_spark.plans.checks import assert_not_in_plan, plan_str
+
+    hof = {"transform", "filter", "aggregate", "zip_with", "exists", "forall"}
+    found = set()
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            where = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr in hof
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "F"
+                ):
+                    found.add((path.name, where))
+    assert found == {("similarity.py", "_dot")}, found
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    # the second join side reads the signature aggregate's partial
+    # (min / sum) exchange back instead of recomputing it
+    for df, partial in (
+        (minhash_lsh_pairs(docs), "min"),
+        (simhash_near_pairs(docs, max_hamming=4), "sum"),
+    ):
+        assert_not_in_plan(df, "CartesianProduct", "BroadcastNestedLoopJoin")
+        df.collect()
+        plan = plan_str(df, "simple")  # the AQE final plan, after execution
+        assert re.search(rf"ReusedExchange \[doc_id#\d+L, {partial}#", plan), plan
 
 
 def test_minhash_scales_with_duplicate_heavy_docs(spark):
@@ -126,11 +213,6 @@ def test_simhash_properties(spark):
     pairs = {(r.doc_a, r.doc_b): r.hamming for r in near_df.collect()}
     assert (0, 1) in pairs  # near-dup within hamming budget
     assert (0, 2) not in pairs and (1, 2) not in pairs
-    # both hash families keep the near/far separation; xxhash64 is the
-    # JVM-only fast path, md5 the oracle-reproducible default
-    xx = {(r.doc_a, r.doc_b) for r in
-          simhash_near_pairs(df, max_hamming=12, hash_family="xxhash64").collect()}
-    assert (0, 1) in xx and (0, 2) not in xx
 
 
 def test_simhash_band_blocking_recall(spark):
@@ -217,9 +299,11 @@ def test_corpus_curation(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     losers = {r.doc_id for r in near_dup_losers(docs).collect()}
-    # the scale-safe default (minhash candidates) removes the same documents
-    # as the exact quadratic pair join on this corpus
-    exact_losers = {r.doc_id for r in near_dup_losers(docs, dedup="exact").collect()}
+    # the scale-safe minhash candidates remove the same documents as the
+    # exact quadratic pair join on this corpus
+    exact_losers = {
+        r.doc_b for r in ngram_jaccard_pairs(docs, 0.4, 2).select("doc_b").distinct().collect()
+    }
     assert losers == exact_losers
     out = curate(docs, min_quality=0.3, lang=None)
     rows = out.collect()
