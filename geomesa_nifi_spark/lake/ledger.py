@@ -143,6 +143,18 @@ def files_covering(files, buckets, num_buckets: int) -> list[DataFile]:
     return out
 
 
+#: commit operations that provably change no logical row — they only
+#: reorganize files or metadata.  Change readers skip them; everything else
+#: (merge / merge_mor / append, but also rollback, publish, and any future
+#: op) is data-changing: view refresh diffs its file lists, and the change
+#: feed must represent it as change rows or raise.  A denylist fails SAFE:
+#: an unknown op is treated as changing rows.
+ROW_PRESERVING_OPS = frozenset({
+    "create", "create_branch", "compact", "rescale", "rescale_lazy",
+    "evolve_schema", "audit_reject",
+})
+
+
 class Snapshot:
     """One committed table version.
 

@@ -64,25 +64,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geomesa_nifi_spark.lake.ledger import covered_buckets
+from geomesa_nifi_spark.lake.ledger import ROW_PRESERVING_OPS, covered_buckets
 from geomesa_nifi_spark.lake.merge import MergeResult, merge_changes
 from geomesa_nifi_spark.lake.table import LakeTable
 
 MV_KEY = "_mv_key"
 MV_VERSION = "_mv_version"
-
-#: source-commit operations that provably do NOT change logical rows —
-#: they only reorganize files or metadata.  Everything else (merge /
-#: merge_mor / append, but also rollback, publish, and any future op) is
-#: treated as data-changing and has its file lists diffed: every commit
-#: carries a full file list, so the parent diff bounds its touched
-#: buckets regardless of what the operation was.  A denylist fails SAFE —
-#: an unknown op widens the diff (extra buckets' unchanged rows cancel
-#: exactly), whereas the old allowlist silently skipped rollback commits.
-_ROW_PRESERVING_OPS = {
-    "create", "create_branch", "compact", "rescale", "rescale_lazy",
-    "evolve_schema", "audit_reject",
-}
 
 
 class MaterializeRetentionError(RuntimeError):
@@ -266,7 +253,7 @@ def _touched_in_range(
             f"expired (expire_snapshots horizon); rebuild() the view"
         ) from exc
     for snap, parent in reversed(chain):
-        if snap.summary.get("operation") in _ROW_PRESERVING_OPS:
+        if snap.summary.get("operation") in ROW_PRESERVING_OPS:
             continue
         any_data = True
         nb = int(snap.properties["num_buckets"])

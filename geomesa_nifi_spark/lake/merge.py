@@ -22,16 +22,17 @@ Physical shape (what Catalyst executes):
       -> touched-bucket set (tiny driver collect, <= B values)
     target
       -> ledger file pruning: ONLY files of touched buckets are read
-    full-outer sort-merge join on key (AQE skew split applies)
-      -> per-row resolution (pure column expressions, whole-stage codegen)
-      -> observe() counters (inserted/updated/deleted/kept)
+    target UNION batch -> one groupBy(key): max_by of the row over
+      (ts, tiebreak, _src) — the merge-on-read LWW rule, source wins ties
+      -> per-key action (pure column expressions)
+      -> observe() counters (inserted/updated/deleted/kept/rejected/tombstoned)
       -> one shuffle to _bucket, write one file set per touched bucket
     ledger commit: untouched buckets' files carried over; batch_id recorded
       -> replaying a committed batch is a no-op (exactly-once)
 
 At 100 TB the dominant cost is rewriting touched buckets; choosing
 ``num_buckets`` so a batch touches a bounded fraction keeps the rewrite
-O(batch-locality), and the source side of the join is one deduped row per
+O(batch-locality), and the batch side of the union is one deduped row per
 key — orders of magnitude smaller than the target.
 """
 
@@ -45,11 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geomesa_nifi_spark.lake import evolution
-from geomesa_nifi_spark.lake.ledger import (
-    Snapshot,
-    covered_buckets,
-    files_covering,
-)
+from geomesa_nifi_spark.lake.ledger import Snapshot, covered_buckets
 from geomesa_nifi_spark.lake.table import BUCKET_COL, DELETED_COL, LakeTable
 from geomesa_nifi_spark.operators.dedup import lww_dedup
 
@@ -59,9 +56,8 @@ OP_DELETE = "delete"
 #: update_by_attribute; beyond it the zone-map pruning is skipped (same
 #: guard shape as visibility's MAX_DISTINCT_LABELS)
 MAX_LOOKUP_VALUES = 10_000
-#: the CoW merge broadcasts the deduped batch only below this cached size
-#: (see :func:`_pick_join_strategy`)
-BROADCAST_THRESHOLD_BYTES = 64 * 1024 * 1024
+#: CoW resolution's row-origin column: 0 = stored row, 1 = batch row
+_SRC = "_src"
 
 
 @dataclass
@@ -102,7 +98,7 @@ def merge_changes(
     *transformed* shape.
 
     ``mode``:
-      * ``"cow"`` — copy-on-write: join against the touched buckets and
+      * ``"cow"`` — copy-on-write: resolve against the touched buckets and
         rewrite them.  Read-optimal; write cost grows with table locality.
       * ``"mor"`` — merge-on-read: append the deduped batch (including
         tombstones) as *delta* files, no target read at all.  Write cost is
@@ -147,8 +143,8 @@ def merge_changes(
     if rec.dropped:
         src = src.drop(*rec.dropped)
     # Coerce source columns to the table's declared types (covers the
-    # ntz<->ltz pairs reconcile allows) so the full-outer join and the
-    # resolution expressions see one type on both sides.
+    # ntz<->ltz pairs reconcile allows) so the bucket hash, the written
+    # files and the CoW resolution all see the table's types.
     src_types = {f.name: f.dataType for f in src.schema.fields}
     for f in final_schema.fields:
         if f.name in src_types and src_types[f.name] != f.dataType:
@@ -169,13 +165,14 @@ def merge_changes(
             lineage, max_records_per_file, auto_compact, collect_metrics,
         )
 
-    # The deduped source feeds two consumers (bucket discovery + the join);
-    # persist it so the upstream read/extract/dedup chain runs once.
+    # The deduped source feeds two consumers (bucket discovery + the
+    # resolution); persist it so the upstream read/extract/dedup chain runs
+    # once.
     src_cached = src.persist()
     try:
         def plan(b):
-            """(modulus, source bucketed under it, touched buckets, join
-            strategy) of a merge executing against snapshot ``b``."""
+            """(modulus, source bucketed under it, touched buckets) of a
+            merge executing against snapshot ``b``."""
             b_nb = int(b.properties["num_buckets"])
             s = src_cached if b_nb == nb else src_cached.withColumn(
                 BUCKET_COL, table.bucket_expr(num_buckets=b_nb)
@@ -183,43 +180,34 @@ def merge_changes(
             touched = sorted(
                 r[0] for r in s.select(BUCKET_COL).distinct().collect()
             )  # <= num_buckets rows: trivially driver-safe at any scale
-            if not touched:
-                return b_nb, s, touched, None
             # sibling closure: after a lazy rescale an old-modulus file spans
             # several current buckets; rewriting any of them must rewrite all
             # (identity on tables without lazy debt) — this is also how lazy
             # debt migrates: the rewrite re-labels those rows under the
             # current modulus and retires the stamped file
-            touched = table.closure_buckets(touched, snapshot=b)
-            tgt_rows = sum(
-                f.rows
-                for f in files_covering(b.files, touched, b_nb)
-                if f.kind == "base"
-            )
-            strategy = _pick_join_strategy(s, BROADCAST_THRESHOLD_BYTES, tgt_rows)
-            return b_nb, s, touched, strategy
+            return b_nb, s, table.closure_buckets(touched, snapshot=b)
 
-        mod, s, touched, strategy = plan(base)
+        mod, s, touched = plan(base)
         if not touched:
             return MergeResult(snapshot=None, skipped=True, metrics={"reason": "empty_batch"})
         prev = done = None  # last snapshot built on; its written resolution
 
         def build(b):
-            nonlocal mod, s, touched, strategy, prev, done
+            nonlocal mod, s, touched, prev, done
             if int(b.properties["num_buckets"]) != mod:
                 # lost the race to a rescale: the batch's bucket labels and
                 # the touched set are stale under the new modulus — re-bucket
                 # (cheap: the source is persisted), re-prune and redo.  A
                 # LAZY rescale keeps every file path identical, so the
                 # overlap test below alone would wrongly rebase.
-                (mod, s, touched, strategy), done = plan(b), None
+                (mod, s, touched), done = plan(b), None
             elif (
                 done is not None
                 and _changed_buckets(prev, b, mod) & set(touched)
                 and not _conflicts_are_compaction_only(table, prev, b, touched)
             ):
                 # a concurrent commit added NEW logical content to one of
-                # OUR buckets: the join we executed is stale — redo the
+                # OUR buckets: the resolution we executed is stale — redo the
                 # merge against the new head.  Every intervening commit on
                 # our buckets being a compaction (a logical no-op fold of
                 # the very files our scan read) keeps the resolution valid:
@@ -230,9 +218,9 @@ def merge_changes(
             prev = b
             if done is None:
                 done = _resolve_and_write(
-                    table, s, touched, b, rec, final_schema, batch_id, op_col,
+                    table, s, touched, b, final_schema, batch_id, op_col,
                     ts_col, tiebreak, update_mode, lineage, collect_metrics,
-                    max_records_per_file, strategy,
+                    max_records_per_file,
                 )
             new_files, summary, _ = done
             # merge with the base schema at commit time so a rebase after
@@ -484,51 +472,6 @@ def migrate_layout(
         compact(table, buckets=buckets, max_records_per_file=max_records_per_file)
 
 
-#: auto picks broadcast only when the touched-bucket target holds at least
-#: this many rows per deduped source row.  Broadcasting the source pays for
-#: itself by NOT shuffling the (much bigger) target; when the two sides are
-#: comparable — a bulk backfill, or a small table — the SMJ's one shuffle is
-#: cheaper than hash-building the source on every task (measured 2x at
-#: batch≈target size, see BASELINE.md round 3).
-BROADCAST_MIN_TARGET_RATIO = 8
-
-
-def _pick_join_strategy(
-    src: DataFrame,
-    threshold_bytes: int,
-    tgt_rows: int | None = None,
-) -> str:
-    """The CoW merge's join: ``"broadcast"`` — the resolution decomposed
-    into broadcast joins with ZERO shuffle of the target side — when the
-    deduped batch's cached size is under ``threshold_bytes`` AND the
-    touched-bucket target holds ≥``BROADCAST_MIN_TARGET_RATIO``× the
-    batch's rows; else the ``"full_outer"`` sort-merge join.
-
-    Stats-driven: the deduped source is persisted and already materialized
-    (by the bucket-discovery collect), so its InMemoryRelation size
-    estimate is accurate — the same signal Catalyst's CBO would use.
-    ``tgt_rows`` comes from the ledger metadata (zero extra jobs).  At
-    100 TB the touched-bucket target of a CDC batch is orders of magnitude
-    bigger than the batch, so broadcast is the common case; the SMJ takes
-    bulk backfills and batch-sized tables, where hash-building the source
-    per task costs more than its one shuffle saves."""
-    try:
-        stats = src._jdf.queryExecution().optimizedPlan().stats()
-        size = int(str(stats.sizeInBytes()))
-        rc = stats.rowCount()
-        src_rows = int(str(rc.get())) if rc.isDefined() else None
-    except Exception:
-        return "full_outer"
-    if not (0 < size <= threshold_bytes):
-        return "full_outer"
-    if tgt_rows is not None:
-        if src_rows is None:
-            src_rows = src.count()  # cached by the caller's persist: cheap
-        if src_rows and tgt_rows < BROADCAST_MIN_TARGET_RATIO * src_rows:
-            return "full_outer"
-    return "broadcast"
-
-
 def _conflicts_are_compaction_only(table, base, newer, touched) -> bool:
     """True when every commit in (base, newer] whose file changes touch any
     of ``touched`` was a compaction.  Compaction folds delta files into base
@@ -565,25 +508,18 @@ def _conflicts_are_compaction_only(table, base, newer, touched) -> bool:
 
 
 def _resolve_and_write(
-    table, src, touched, base, rec, final_schema, batch_id, op_col,
+    table, src, touched, base, final_schema, batch_id, op_col,
     ts_col, tiebreak, update_mode, lineage, collect_metrics,
-    max_records_per_file, join_strategy: str = "full_outer",
+    max_records_per_file,
 ) -> tuple[list, dict, dict]:
     """Execute the CoW resolution of ``src`` against ``base``'s touched
     buckets and write it: ``(new files, commit summary, metrics)``."""
     key = table.key_col
     final_cols = [f.name for f in final_schema.fields]
 
-    tgt = table.scan(snapshot=base, buckets=touched, include_tombstones=True)
-    # Null-pad target for newly added columns (old files lack them anyway,
-    # but the scan used the pre-evolution snapshot schema).
-    for f in rec.added:
-        if f.name not in tgt.columns:
-            tgt = tgt.withColumn(f.name, F.lit(None).cast(f.dataType))
-
     resolved = _resolve(
         src=src,
-        tgt=tgt,
+        tgt=table.scan(snapshot=base, buckets=touched, include_tombstones=True),
         key=key,
         op_col=op_col,
         ts_col=ts_col,
@@ -593,7 +529,6 @@ def _resolve_and_write(
         bucket_expr=table.bucket_expr(
             num_buckets=int(base.properties["num_buckets"])
         ),
-        join_strategy=join_strategy,
     )
 
     obs = None
@@ -950,6 +885,8 @@ def update_by_attribute(
     return result
 
 
+
+
 def _resolve(
     src: DataFrame,
     tgt: DataFrame,
@@ -960,143 +897,85 @@ def _resolve(
     final_schema: T.StructType,
     update_mode: str,
     bucket_expr,
-    join_strategy: str = "full_outer",
 ) -> DataFrame:
-    """Key join + per-row CDC resolution, all column expressions.
+    """Per-key CDC resolution: ``target ∪ batch`` folded by one
+    ``groupBy(key)`` ``max_by`` — the last-writer-wins rule merge-on-read
+    reads and compaction apply.
+
+    The order is ``(ts, tiebreak if the batch carries it, _src)``.  The scan
+    leaves at most one target row per key (``_src=0``) and the batch is
+    deduped (``_src=1``), so the order is total per key: the source wins
+    exact ties and a null order component loses (as in ``lww_dedup``).
 
     Deletes produce **tombstones**: the row is kept with ``_deleted=true``
     and its LWW order keys, so an older upsert replayed *after* the delete
     still loses — the final state is independent of how the stream was
     batched (SURVEY.md §7 hard-part 1/2).  Public scans filter tombstones.
     """
-    final_cols = [f.name for f in final_schema.fields]
-    src_cols = set(src.columns)
-
-    s = src.select(
-        F.col(key).alias("_sk"),
-        F.col(op_col).alias("_sop"),
-        *[F.col(c).alias(f"_s_{c}") for c in final_cols if c in src_cols and c != key],
-    )
-    t = tgt.select(
-        F.col(key).alias("_tk"),
-        F.col(DELETED_COL).alias("_tdel"),
-        *[F.col(c).alias(f"_t_{c}") for c in final_cols if c != key],
-    )
-
-    if join_strategy == "broadcast":
-        # Shuffle-free target side: the full outer is emulated without ever
-        # exchanging the big side —
-        #   t ⟕ src (left_outer BroadcastHashJoin): ONE full-width scan of
-        #     the touched buckets produces BOTH the matched rows (source
-        #     columns filled) and the target-only rows (source columns null).
-        #   src-only = src ▷ matched-keys, where matched-keys comes from a
-        #     KEY-PRUNED second pass (parquet reads only the key column — a
-        #     few % of the bytes) semi-joined against the broadcast source.
-        # Total target cost: 1 full-width scan + 1 key-only scan, vs the SMJ
-        # full-outer which shuffles every touched-bucket row.  All frames are
-        # padded to the same joined shape and the identical resolution
-        # expressions below apply.
-        sb = F.broadcast(s)
-        t_fields = {f.name: f.dataType for f in t.schema.fields}
-        matched_or_tgt_only = t.join(sb, t["_tk"] == s["_sk"], "left_outer")
-        matched_keys = (
-            t.select("_tk")
-            .join(F.broadcast(s.select("_sk")), F.col("_tk") == F.col("_sk"), "left_semi")
-            .select(F.col("_tk").alias("_mk"))
-        )
-        src_only = s.join(
-            F.broadcast(matched_keys), s["_sk"] == F.col("_mk"), "left_anti"
-        ).select(
-            "*", *[F.lit(None).cast(dt).alias(c) for c, dt in t_fields.items()]
-        )
-        j = matched_or_tgt_only.unionByName(src_only)
-    else:
-        j = t.join(s, t["_tk"] == s["_sk"], "full_outer")
-
-    matched = F.col("_tk").isNotNull() & F.col("_sk").isNotNull()
-    src_only = F.col("_tk").isNull() & F.col("_sk").isNotNull()
-    is_delete = F.col("_sop") == OP_DELETE
-    tgt_dead = F.coalesce(F.col("_tdel"), F.lit(False))
     types = {f.name: f.dataType for f in final_schema.fields}
+    provided = {c for c in types if c in src.columns}
 
-    def s_(c):  # source value or typed null if the batch didn't provide it
-        if c == key:
-            return F.col("_sk")
-        if f"_s_{c}" in j.columns:
-            return F.col(f"_s_{c}")
-        return F.lit(None).cast(types[c])
+    def side(df, cols, deleted, tag):
+        return df.select(
+            *[
+                (F.col(c) if c in cols else F.lit(None)).cast(t).alias(c)
+                for c, t in types.items()
+            ],
+            deleted.alias(DELETED_COL),
+            F.lit(tag).alias(_SRC),
+        )
 
-    def t_(c):
-        return F.col("_tk") if c == key else F.col(f"_t_{c}")
+    # a column the evolving batch adds is absent from the stored files: the
+    # target side reads it as null
+    u = side(tgt, set(tgt.columns), F.col(DELETED_COL), 0).unionByName(
+        side(src, provided, F.coalesce(F.col(op_col) == OP_DELETE, F.lit(False)), 1)
+    )
+    order = F.struct(ts_col, *([tiebreak] if tiebreak in provided else []), _SRC)
+    data = [c for c in types if c != key]
+    aggs = [
+        # the whole winning row in ONE max_by: CoW writes every column, so
+        # per-column aggregates would only repeat the order comparison
+        F.max_by(F.struct(*data, DELETED_COL, _SRC), order).alias("_w"),
+        (F.min(_SRC) == 0).alias("_has_tgt"),
+        F.max((F.col(_SRC) == 0) & F.col(DELETED_COL)).alias("_tgt_dead"),
+    ]
+    # partial update: a column the batch does not provide keeps the TARGET's
+    # value on update (min_by over _src picks the target row)
+    kept = [c for c in data if c not in provided] if update_mode == "partial" else []
+    if kept:
+        aggs.append(F.min_by(F.struct(*kept), _SRC).alias("_t"))
+    resolved = u.groupBy(key).agg(*aggs)
 
-    # LWW: the source wins when its (ts, tiebreak) >= the stored row's —
-    # including against tombstones, which retain their order keys.
-    if tiebreak and f"_s_{tiebreak}" in j.columns:
-        src_wins = F.struct(s_(ts_col), s_(tiebreak)) >= F.struct(t_(ts_col), t_(tiebreak))
-    else:
-        src_wins = s_(ts_col) >= t_(ts_col)
-    src_wins = F.coalesce(src_wins, F.lit(False))
-
+    src_wins = F.col("_w")[_SRC] == 1
+    is_delete = F.col("_w")[DELETED_COL]  # the source op when it wins
+    tgt_live = F.col("_has_tgt") & ~F.col("_tgt_dead")
+    action = (
+        F.when(src_wins & is_delete & tgt_live, "delete")
+        # newer delete over a tombstone, or delete-before-insert: a tombstone
+        # with the delete's order keys, else an upsert between the two delete
+        # timestamps could resurrect
+        .when(src_wins & is_delete, "tombstone")
+        .when(src_wins & ~tgt_live, "insert")  # new key, or resurrect
+        .when(src_wins, "update")
+        .otherwise("keep")
+    )
     if update_mode == "partial":
         # UpdateGeoMesaRecord: no insert fallback; unmatched sources are
         # failures (UpdateGeoMesaRecord.scala:168-170).
-        action = (
-            F.when(matched & src_wins & is_delete & ~tgt_dead, "delete")
-            # newer delete over a tombstone: advance its order keys, else an
-            # upsert between the two delete timestamps could resurrect
-            .when(matched & src_wins & is_delete, "tombstone")
-            .when(matched & src_wins & tgt_dead, "insert")  # resurrect
-            .when(matched & src_wins, "update")
-            .when(matched, "keep")
-            .when(src_only, "reject")
-            .otherwise("keep")
-        )
-        provided = {c for c in final_cols if f"_s_{c}" in j.columns or c == key}
+        action = F.when(src_wins & ~F.col("_has_tgt"), "reject").otherwise(action)
+    resolved = resolved.withColumn("_action", action)
 
-        def updated_value(c):
-            if c in provided:
-                return s_(c)  # overwrite with source value, even if null
-            return t_(c)
+    def value(c):
+        if c == key:
+            return F.col(key)
+        if c in kept:
+            # the target's value where the row stays or is updated in place;
+            # an inserted or deleted row has nothing to keep
+            return F.when(F.col("_action").isin("update", "keep"), F.col("_t")[c])
+        return F.col("_w")[c]
 
-    else:  # full row replacement with insert fallback (ModifyWriter :143-147)
-        action = (
-            F.when(matched & src_wins & is_delete & ~tgt_dead, "delete")
-            # newer delete over a tombstone: advance its order keys, else an
-            # upsert between the two delete timestamps could resurrect
-            .when(matched & src_wins & is_delete, "tombstone")
-            .when(matched & src_wins & tgt_dead, "insert")  # resurrect
-            .when(matched & src_wins, "update")
-            .when(matched, "keep")
-            .when(src_only & is_delete, "tombstone")  # delete-before-insert
-            .when(src_only, "insert")
-            .otherwise("keep")
-        )
-
-        def updated_value(c):
-            return s_(c)
-
-    j = j.withColumn("_action", action)
-
-    src_winner = F.col("_action").isin("insert", "update", "delete", "tombstone")
-    out_cols = []
-    for c in final_cols:
-        if update_mode == "partial":
-            val = (
-                F.when(F.col("_action") == "update", updated_value(c))
-                .when(src_winner, s_(c))
-                .otherwise(t_(c))
-            )
-        else:
-            val = F.when(src_winner, s_(c)).otherwise(t_(c))
-        out_cols.append(val.cast(types[c]).alias(c))
-
-    # Tombstone rows keep the winner's LWW order keys; delete events carry
-    # null payloads already, so no extra nulling is needed.
-    deleted_flag = (
-        F.when(F.col("_action").isin("delete", "tombstone"), F.lit(True))
-        .when(src_winner, F.lit(False))
-        .otherwise(tgt_dead)
-    )
-
-    resolved = j.select(*out_cols, deleted_flag.alias(DELETED_COL), F.col("_action"))
-    return resolved.withColumn(BUCKET_COL, bucket_expr)
+    return resolved.select(
+        *[value(c).alias(c) for c in types],
+        F.col("_w")[DELETED_COL].alias(DELETED_COL),
+        "_action",
+    ).withColumn(BUCKET_COL, bucket_expr)

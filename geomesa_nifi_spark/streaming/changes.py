@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geomesa_nifi_spark.lake.ledger import Snapshot
+from geomesa_nifi_spark.lake.ledger import ROW_PRESERVING_OPS, Snapshot
 from geomesa_nifi_spark.lake.table import DELETED_COL, LakeTable
 
 
@@ -58,14 +58,6 @@ class ChangelogDiscontinuityError(RuntimeError):
     a full scan at the discontinuity."""
 
 
-#: commits that change no logical row and are silently skipped; anything
-#: else must either be representable as change rows or raise loudly
-_ROW_PRESERVING_OPS = {
-    "create", "create_branch", "compact", "rescale", "rescale_lazy",
-    "evolve_schema", "audit_reject",
-}
-
-
 def _published_commits_fallback(
     table: LakeTable,
     snap: Snapshot,
@@ -86,7 +78,7 @@ def _published_commits_fallback(
     pieces: list[DataFrame] = []
     for e in entries:  # stored oldest-first
         op = e.get("operation")
-        if op in _ROW_PRESERVING_OPS:
+        if op in ROW_PRESERVING_OPS:
             continue
         added = e.get("added_files")
         # nested publishes are spliced into flattened merge_mor/append
@@ -132,7 +124,7 @@ def _change_pieces(
     branch can actually observe)."""
     spark = table.spark
     op = snap.summary.get("operation")
-    if op in _ROW_PRESERVING_OPS:
+    if op in ROW_PRESERVING_OPS:
         return []
     if op == "publish":
         # Replay the published branch's own commits (fork, head] — walk the

@@ -163,7 +163,6 @@ def run_file_replay(
     pipeline_id: str = "cdc",
     max_files_per_trigger: int = 1,
     extract: bool = True,
-    extract_stage: str = "post_dedup",  # post_dedup | pre
     write_mode: str = "merge",  # merge (CoW) | mor | append
     compat_mode: CompatibilityMode = CompatibilityMode.UPDATE,
     metrics_path: str | None = None,
@@ -185,13 +184,11 @@ def run_file_replay(
     left off.  ``fail_after_batches`` injects a mid-stream crash for the
     resumability tests.
 
-    ``extract_stage="post_dedup"`` (default) runs the html->text UDF inside
-    the merge, after per-batch LWW dedup: only winners are extracted and the
-    raw html crosses one shuffle less — cheaper at any scale, identical
-    final state (extraction is a pure per-row function).  ``"pre"`` keeps
-    the reference's literal order (convert every record, then write) — it is
-    required for the append path and when the quarantine rules inspect
-    extracted columns.
+    ``extract`` runs the html->text UDF inside the merge, after per-batch
+    LWW dedup: only winners are extracted and the raw html crosses one
+    shuffle less — cheaper at any scale, identical final state (extraction
+    is a pure per-row function).  The append path has no dedup, so it keeps
+    the reference's literal order: convert every record, then write.
 
     ``refresh_views``: incremental materialized views (``lake/materialize``)
     advanced in the background, off the micro-batch path: each batch only
@@ -262,7 +259,7 @@ def run_file_replay(
         if hwm is not None:
             batch = batch.filter(F.col(handoff_offset_col) > F.lit(hwm))
         offset_ranges = partition_offset_ranges(batch)
-        post_dedup = extract and extract_stage == "post_dedup" and write_mode != "append"
+        post_dedup = extract and write_mode != "append"
         prepared = extract_pages(batch) if (extract and not post_dedup) else batch
         prepared = prepared.drop("partition") if "partition" in prepared.columns else prepared
         transform = (

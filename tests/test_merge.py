@@ -9,6 +9,7 @@ FIXTURES.md.
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -415,13 +416,9 @@ def _mixed_batches():
     ]
 
 
-@pytest.mark.parametrize("strategy", ["full_outer", "broadcast"])
-def test_join_strategies_identical_state(spark, tmp_path, monkeypatch, strategy):
-    monkeypatch.setattr(
-        "geomesa_nifi_spark.lake.merge._pick_join_strategy", lambda *a: strategy
-    )
+def test_join_strategies_identical_state(spark, tmp_path):
     table = LakeTable.create(
-        spark, str(tmp_path / f"t-{strategy}"), SCHEMA,
+        spark, str(tmp_path / "t"), SCHEMA,
         key_col="url", ts_col="warc_ts", tiebreak_col="offset", num_buckets=8,
     )
     for i, rows in enumerate(_mixed_batches()):
@@ -430,13 +427,9 @@ def test_join_strategies_identical_state(spark, tmp_path, monkeypatch, strategy)
     assert state == {"a": ("back", 9), "b": ("b1", 1), "e": ("e1", 4)}
 
 
-@pytest.mark.parametrize("strategy", ["full_outer", "broadcast"])
-def test_join_strategies_identical_partial_update(spark, tmp_path, monkeypatch, strategy):
-    monkeypatch.setattr(
-        "geomesa_nifi_spark.lake.merge._pick_join_strategy", lambda *a: strategy
-    )
+def test_join_strategies_identical_partial_update(spark, tmp_path):
     table = LakeTable.create(
-        spark, str(tmp_path / f"p-{strategy}"), SCHEMA,
+        spark, str(tmp_path / "p"), SCHEMA,
         key_col="url", ts_col="warc_ts", tiebreak_col="offset", num_buckets=8,
     )
     merge_changes(
@@ -455,71 +448,32 @@ def test_join_strategies_identical_partial_update(spark, tmp_path, monkeypatch, 
     assert r.metrics.get("rejected") == 1
 
 
-def test_broadcast_strategy_no_target_shuffle(spark, tmp_path):
-    """The broadcast decomposition must never exchange the target side:
-    the plan contains BroadcastHashJoins and no SortMergeJoin."""
+def test_cow_resolve_is_one_aggregate_over_union(spark, tmp_path):
+    """The CoW resolution joins nothing: target and batch meet in one
+    aggregate keyed on the table key, above a Union of the two sides."""
     from geomesa_nifi_spark.lake.merge import _resolve
+    from geomesa_nifi_spark.plans.checks import assert_not_in_plan, plan_str
 
     table = LakeTable.create(
-        spark, str(tmp_path / "bp"), SCHEMA,
+        spark, str(tmp_path / "rp"), SCHEMA,
         key_col="url", ts_col="warc_ts", tiebreak_col="offset", num_buckets=8,
     )
-    merge_changes(table, spark.createDataFrame([ev("a", 1, "a1")], CHANGE), batch_id="b-0")
+    merge_changes(table, spark.createDataFrame([ev("a", 1, "a1")], CHANGE), batch_id="r-0")
     src = spark.createDataFrame([ev("a", 2, "a2"), ev("x", 2, "x1")], CHANGE)
-
-    tgt = table.scan(include_tombstones=True)
     resolved = _resolve(
-        src=src, tgt=tgt, key="url", op_col="op", ts_col="warc_ts",
-        tiebreak="offset", final_schema=SCHEMA, update_mode="full",
-        bucket_expr=table.bucket_expr(), join_strategy="broadcast",
+        src=src, tgt=table.scan(include_tombstones=True), key="url", op_col="op",
+        ts_col="warc_ts", tiebreak="offset", final_schema=SCHEMA,
+        update_mode="full", bucket_expr=table.bucket_expr(),
     )
-    plan = resolved._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # One full-width target scan (the left_outer) + one key-pruned scan (the
-    # matched-keys semi-join) — the round-2 decomposition paid three.
-    scans = [ln for ln in plan.splitlines() if "Scan parquet" in ln or "FileScan parquet" in ln]
-    assert len(scans) == 2, plan
-    key_only = [ln for ln in scans if "ReadSchema: struct<url:string>" in ln]
-    assert len(key_only) == 1, "expected exactly one key-pruned target scan:\n" + plan
-
-
-def test_auto_strategy_picks_broadcast_for_small_batch(spark, tmp_path):
-    from geomesa_nifi_spark.lake.merge import _pick_join_strategy
-
-    small = spark.createDataFrame([ev("a", 1, "x")], CHANGE).persist()
-    small.count()
-    assert _pick_join_strategy(small, 64 * 1024 * 1024) == "broadcast"
-    assert _pick_join_strategy(small, 1) == "full_outer"
-    small.unpersist()
-
-
-def test_auto_strategy_requires_target_much_bigger(spark):
-    """Broadcast only pays when the touched-bucket target dwarfs the batch
-    (measured 2x slower at batch≈target size): the auto pick must take the
-    SMJ for backfill-shaped batches even when they fit the size threshold."""
-    from geomesa_nifi_spark.lake.merge import (
-        BROADCAST_MIN_TARGET_RATIO,
-        _pick_join_strategy,
-    )
-
-    src = spark.createDataFrame([ev(f"k{i}", 1, "x") for i in range(10)], CHANGE).persist()
-    src.count()
-    mb64 = 64 * 1024 * 1024
-    # target barely bigger than the batch -> SMJ
-    assert _pick_join_strategy(src, mb64, tgt_rows=10) == "full_outer"
-    assert (
-        _pick_join_strategy(src, mb64, tgt_rows=10 * BROADCAST_MIN_TARGET_RATIO - 1)
-        == "full_outer"
-    )
-    # target >= ratio x batch -> broadcast
-    assert (
-        _pick_join_strategy(src, mb64, tgt_rows=10 * BROADCAST_MIN_TARGET_RATIO)
-        == "broadcast"
-    )
-    # empty target (first batch): nothing to save by broadcasting
-    assert _pick_join_strategy(src, mb64, tgt_rows=0) == "full_outer"
-    src.unpersist()
+    assert_not_in_plan(resolved, "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")
+    lines = plan_str(resolved, "simple").splitlines()
+    final_aggs = [
+        i for i, ln in enumerate(lines)
+        if re.search(r"Aggregate\(keys?=\[url#\d+\], functions=\[max_by\(", ln)
+    ]
+    assert len(final_aggs) == 1, "\n".join(lines)
+    union = [i for i, ln in enumerate(lines) if ln.lstrip(" +-:").startswith("Union")]
+    assert len(union) == 1 and union[0] > final_aggs[0], "\n".join(lines)
 
 
 def test_update_by_attribute(spark, table):

@@ -44,23 +44,60 @@ def state(t):
     return {r.url: r for r in t.scan().collect()}
 
 
+def _edge_batches():
+    """Every resolution edge: insert, update, late-lose, delete, tombstone
+    refresh, resurrect, delete-before-insert, a late delete, and exact
+    re-deliveries whose order keys tie the stored row's."""
+    return [
+        [ev("a", 1, "a1"), ev("b", 1, "b1"), ev("c", 1, "c1")],
+        [ev("a", 5, "a2"), ev("b", 0, "late"), ev("c", 6, None, op="delete"),
+         ev("d", 2, None, op="delete")],  # delete-before-insert
+        [ev("c", 3, "stale"), ev("d", 1, "too-old"), ev("a", 7, None, op="delete"),
+         ev("e", 4, "e1"), ev("b", 1, "b1")],  # re-delivered b ties the stored row
+        [ev("a", 9, "back"), ev("c", 8, None, op="delete"),  # resurrect a; refresh c
+         ev("e", 2, None, op="delete"), ev("e", 4, "e1")],  # late delete; tie
+    ]
+
+
 def test_mor_semantics_match_cow(spark, tmp_path):
-    """Same event stream through both write paths -> identical final state."""
+    """Same event stream through both write paths -> identical final state:
+    a scrambled generated stream, the resolution edge cases, and a stored
+    null-ts row on a table without a tiebreak column (a null order
+    component loses LWW on both paths)."""
     events = change_stream(spark, 400, n_keys=80, seed=21, payload="text").drop(
         "partition", "lang"
     )
-    cow = make(spark, tmp_path, "cow")
-    mor = make(spark, tmp_path, "mor")
-    for b in [2, 0, 3, 1]:  # scrambled on purpose
-        batch = events.filter(F.pmod(F.col("offset"), F.lit(4)) == b)
-        merge_changes(cow, batch, batch_id=f"b{b}", mode="cow")
-        merge_changes(mor, batch, batch_id=f"b{b}", mode="mor", auto_compact=False)
-    a = cow.scan().orderBy("url")
-    b = mor.scan().orderBy("url")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # MoR never rewrote: every merge commit only added delta files
-    kinds = {f.kind for f in mor.snapshot().files}
-    assert kinds == {"delta"}
+    null_ts = Row(url="n", warc_ts=None, offset=0, text="x", op="upsert")
+    streams = {
+        "gen": ("offset", [  # scrambled on purpose
+            events.filter(F.pmod(F.col("offset"), F.lit(4)) == b) for b in [2, 0, 3, 1]
+        ]),
+        "edge": ("offset", [spark.createDataFrame(r, CHANGE) for r in _edge_batches()]),
+        "null_ts": (None, [
+            spark.createDataFrame([null_ts], CHANGE),
+            spark.createDataFrame([ev("n", 1, "y")], CHANGE),
+        ]),
+    }
+    states = {}
+    for name, (tiebreak, batches) in streams.items():
+        cow, mor = (
+            LakeTable.create(
+                spark, str(tmp_path / f"{name}-{m}"), SCHEMA,
+                key_col="url", ts_col="warc_ts", tiebreak_col=tiebreak, num_buckets=4,
+            )
+            for m in ("cow", "mor")
+        )
+        for i, batch in enumerate(batches):
+            merge_changes(cow, batch, batch_id=f"b{i}", mode="cow")
+            merge_changes(mor, batch, batch_id=f"b{i}", mode="mor", auto_compact=False)
+        a = cow.scan()
+        b = mor.scan()
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, name
+        # MoR never rewrote: every merge commit only added delta files
+        assert {f.kind for f in mor.snapshot().files} == {"delta"}
+        states[name] = {r.url: r.text for r in a.collect()}
+    assert states["edge"] == {"a": "back", "b": "b1", "e": "e1"}
+    assert states["null_ts"] == {"n": "y"}
 
 
 def test_mor_tombstone_and_lww(spark, tmp_path):

@@ -9,7 +9,7 @@ cannot catch O_EXCL / rename / fsync races between real processes.  This
 harness runs the race for real:
 
 * writer A replays the even batches merge-on-read (with auto-compaction),
-* writer B replays the odd batches copy-on-write (auto join strategy),
+* writer B replays the odd batches copy-on-write,
 * the main process fires a ``rescale(lazy=True)`` 16->32 once a few data
   commits exist (writers must redo in-flight merges onto the new modulus;
   readers must handle mixed-modulus files),
