@@ -416,7 +416,22 @@ def _mixed_batches():
     ]
 
 
-def test_join_strategies_identical_state(spark, tmp_path):
+# Spark's join planning per id: "broadcast" leaves broadcast joins on,
+# "full_outer" turns them off so any join is shuffled. The merge result must
+# not depend on which one the session uses.
+_JOIN_PLANNING = {"broadcast": "10485760", "full_outer": "-1"}
+
+
+@pytest.fixture(params=sorted(_JOIN_PLANNING))
+def join_planning(spark, request):
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, _JOIN_PLANNING[request.param])
+    yield request.param
+    spark.conf.set(conf, prev)
+
+
+def test_join_strategies_identical_state(spark, tmp_path, join_planning):
     table = LakeTable.create(
         spark, str(tmp_path / "t"), SCHEMA,
         key_col="url", ts_col="warc_ts", tiebreak_col="offset", num_buckets=8,
@@ -427,7 +442,7 @@ def test_join_strategies_identical_state(spark, tmp_path):
     assert state == {"a": ("back", 9), "b": ("b1", 1), "e": ("e1", 4)}
 
 
-def test_join_strategies_identical_partial_update(spark, tmp_path):
+def test_join_strategies_identical_partial_update(spark, tmp_path, join_planning):
     table = LakeTable.create(
         spark, str(tmp_path / "p"), SCHEMA,
         key_col="url", ts_col="warc_ts", tiebreak_col="offset", num_buckets=8,
