@@ -141,12 +141,18 @@ def minhash_lsh_pairs(
     """LSH banding: docs agreeing on any band become candidates; candidates
     are verified with exact Jaccard (cheap recall, exact precision).
 
-    Physical shape: shingle hashes explode into ONE ``groupBy(doc_id)``
-    carrying the k permutation ``min``s AND the ``collect_set`` of shingle
-    hashes.  Banding posexplodes the signature into a (band, band_hash)
-    index whose ``bucket_pairs`` self-join yields the candidates, and
-    verification joins each candidate to its two hash sets from the same
-    aggregate — every reader of the signature reuses its exchange.
+    Physical shape: the code states one ``groupBy(doc_id)`` carrying the k
+    permutation ``min``s and the ``collect_set`` of shingle hashes, but
+    column pruning splits it by reader.  Banding reads only the ``min``s
+    and verification only the hash set, so the executed plan holds a
+    ``HashAggregate`` of the ``min``s and an ``ObjectHashAggregate`` of
+    ``collect_set(h)``, each over its own scan → explode → xxhash64 and its
+    own ``Exchange hashpartitioning(doc_id)``.  Exchange reuse shares each
+    one among its readers: banding posexplodes the signature into a (band,
+    band_hash) index whose ``bucket_pairs`` self-join reads the one
+    ``min`` exchange on both sides, and verification joins each candidate
+    to its two hash sets through one shared exchange of the
+    ``collect_set`` (a broadcast at the gate corpora's sizes).
     Signatures use the ``xxhash64(concat_ws shingle, seed)`` /
     ``xxhash64(h, j)`` family; verification intersects 64-bit shingle
     *hash* sets instead of shingle strings — Jaccard over the hashed sets

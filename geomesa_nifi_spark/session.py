@@ -6,6 +6,14 @@ sized to the parallelism rather than the 200 default, Arrow enabled for
 the driver-side pandas conversions (the Python UDF boundary is
 ``arrow_udf``/``mapInArrow`` throughout), and UTC session time so
 timestamp round-trips are deterministic.
+
+Local sessions also run their Python tasks through the engine's worker
+module, ``pyspark_gns_worker`` (``_worker/``). Spark's own worker calls
+``importlib.invalidate_caches()`` at the start of every task, which on
+Python 3.11 makes each cached ``zipimporter`` re-read its archive's
+directory (pyspark.zip, py4j, the Spark core jar, the shipped package):
+a fixed cost on every task of every micro-batch that the module skips.
+Cluster sessions keep Spark's worker (see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -23,6 +31,15 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #: least this much free space; below it, the system temp dir
 SHM_MIN_FREE_BYTES = 4 * 1024**3
 _PYFILES_SHIPPED: set[str] = set()
+#: local sessions' Python worker: the module name and the directory, holding
+#: only that module, that goes on the workers' PYTHONPATH.  One is useless
+#: without the other, so get_spark applies the pair whole or not at all.
+WORKER_CONF = {
+    "spark.python.worker.module": "pyspark_gns_worker",
+    "spark.executorEnv.PYTHONPATH": os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "_worker"
+    ),
+}
 
 
 def _driver_memory_for(meminfo: str) -> str:
@@ -143,6 +160,17 @@ def get_spark(
         builder = builder.config(
             "spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024)
         )
+    if local and not WORKER_CONF.keys() & (extra_conf or {}).keys():
+        # Python tasks skip Spark's per-task re-read of every zip's
+        # directory (module docstring).  Both keys are SparkContext confs,
+        # read once when the context starts, so a context that getOrCreate
+        # finds already running keeps its own pair and never gets half of
+        # ours; an extra_conf naming either key gets neither of ours.
+        # Cluster sessions keep Spark's worker: there the module would have
+        # to reach each executor's daemon through spark.submit.pyFiles,
+        # which is not set up or verified here.
+        for k, v in WORKER_CONF.items():
+            builder = builder.config(k, v)
     builder = (
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
